@@ -357,16 +357,17 @@ def _q_pip(spark, sf_dir):
 
 
 def _q_pip_partitioned(spark, sf_dir):
-    """Broadcast-free PIP twin: distributed cover table (rings carried
-    as WKB through the cell equi-join), same exact output as pip_join —
-    the path for polygon layers too large for a driver-side index."""
-    from fgcspark.joins.pip import pip_join_partitioned
+    """pip_join under the shuffle strategy: the probe input is hinted
+    `merge`, so the cell equi-join against the executor-built cover is
+    a sort-merge join with no broadcast — the plan Spark picks on its
+    own once the layer outgrows the broadcast threshold."""
+    from fgcspark.joins.pip import pip_join
     from fgcspark.pipeline import pages_to_points
 
     d = _geo_dir(sf_dir)
     pts = pages_to_points(spark, d).select("url", "e", "n")
     polys = spark.read.parquet(f"{d}/polygons.parquet")
-    return pip_join_partitioned(spark, pts, polys)
+    return pip_join(spark, pts.hint("merge"), polys)
 
 
 def _q_fp_join(spark, sf_dir):
@@ -385,16 +386,16 @@ def _q_fp_join(spark, sf_dir):
 
 
 def _q_fp_join_partitioned(spark, sf_dir):
-    """Distributed-layer twin of fp_layer_join (cell cogroup +
-    reporting-cell dedup, no broadcast); same forward golden."""
+    """fp_layer_join under the shuffle strategy (probe input hinted
+    `merge`: sort-merge cell join, no broadcast); same forward golden."""
     from fgcspark.extract import with_extracted
-    from fgcspark.joins.fpjoin import footprint_join_partitioned
+    from fgcspark.joins.fpjoin import footprint_join
     from fgcspark.pipeline import load_pages
 
     d = _geo_dir(sf_dir)
     pages = with_extracted(load_pages(spark, d))
     polys = spark.read.parquet(f"{d}/polygons.parquet")
-    return footprint_join_partitioned(spark, pages, polys)
+    return footprint_join(spark, pages.hint("merge"), polys)
 
 
 def _q_pip_counts(spark, sf_dir):

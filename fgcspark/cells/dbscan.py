@@ -33,6 +33,8 @@ Scale shape (10^12 docs, ~10^6-10^8 occupied cells):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,8 +54,9 @@ def dbscan_cells(
     column ('{nb}:{eb}' ids as produced by ``pipeline.pages_to_points``).
 
     Density threshold: either an absolute `min_pts`, or `min_frac` — a
-    FRACTION of the total document count (threshold = round(frac * N),
-    min 2). The fractional form keeps the cluster structure
+    FRACTION of the total document count (threshold = floor(frac * N
+    + 0.5), min 2: halves round up, as DuckDB's round() does in the
+    oracle). The fractional form keeps the cluster structure
     scale-invariant when the same geography carries 10x the documents:
     an absolute threshold degenerates to "every occupied cell is core"
     as density grows, whose single giant component needs
@@ -72,7 +75,7 @@ def dbscan_cells(
     if min_frac is not None:
         counts = counts.persist()
         total = counts.agg(F.sum("n_docs").alias("t")).collect()[0]["t"] or 0
-        min_pts = max(2, int(round(min_frac * total)))
+        min_pts = max(2, math.floor(min_frac * total + 0.5))
     parts = counts.select(
         "cell",
         "n_docs",

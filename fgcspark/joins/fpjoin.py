@@ -23,15 +23,19 @@ golden and scripts/validate_at_scale.py):
   exact-tangency inputs are measure-zero in the synthetic layers and
   not certified (same convention as pip_join).
 
-Physical plan (Spark-first, zero probe-side shuffle):
+Physical plan: joins/pip.py's one spatial-join plan, with a footprint
+probe:
 1. one Arrow-batched pandas UDF parses + projects each footprint ONCE
    and emits its geometry (nested part arrays for the default
    expression refine; WKB for the numpy refine) + bbox, so downstream
    stages never re-parse;
 2. the probe's bbox cell cover is exploded JVM-side with
-   sequence()/explode (pure codegen — footprints are small, the cover
-   is a handful of cells at the prefilter grid);
-3. broadcast hash join against the layer's (cell, poly_id) cover;
+   sequence()/explode (footprints are small, the cover is a handful of
+   cells at the prefilter grid);
+3. cell equi-join against pip.polygon_cover, the executor-built layer,
+   with no join hint: Spark broadcasts the layer while it is under the
+   broadcast threshold (the probe streams with no shuffle) and
+   sort-merge joins above it;
 4. the exact intersects refine: by default nested JVM higher-order
    lambdas over the part/edge arrays (no Python after stage 1);
    optionally the WKB + numpy pandas UDF. Duplicate (footprint,
@@ -40,12 +44,8 @@ Physical plan (Spark-first, zero probe-side shuffle):
    cell containing the lower-left corner of the bbox intersection,
    which both covers are guaranteed to contain. The per-pair predicate
    is heavier than pip_join's, so the default prefilter grid is finer
-   (10 km vs 50 km): a larger broadcast cover buys proportionally
-   fewer candidate pairs.
-
-At 100 TB the page side streams through the scan once — no shuffle, no
-distinct: the broadcast join replicates only the small cover table and
-the dedup is arithmetic inside the refine.
+   (10 km vs 50 km): a larger cover buys proportionally fewer
+   candidate pairs.
 """
 
 from __future__ import annotations
@@ -60,7 +60,16 @@ from pyspark.sql.functions import pandas_udf
 from fgcspark.crs import tm35fin as tm
 from fgcspark.geom.wkb import from_wkb, to_wkb
 from fgcspark.geom.wkt import _KNOWN, Geom, parse_wkt
-from fgcspark.joins.pip import DEFAULT_CELL_KM, build_polygon_index, _pip_mask
+from fgcspark.joins.pip import (
+    EDGE,
+    VERT,
+    _pip_mask,
+    _ring_segs,
+    bbox_cells,
+    build_polygon_index,
+    crossing_parity,
+    polygon_cover,
+)
 
 
 def _project_geom(g: Geom) -> Geom:
@@ -109,14 +118,6 @@ def _flatten_parts(g: Geom, out: list) -> None:
             _flatten_parts(sub, out)
     else:  # POLYGON and unknown tags with POLYGON-shaped nesting
         out.append(("poly", [np.asarray(r, float).reshape(-1, 2) for r in c]))
-
-
-def _ring_segs(arr: np.ndarray, closed: bool) -> np.ndarray:
-    """(k,2) vertices -> (k|k-1, 4) segments [x1 y1 x2 y2]."""
-    a = np.asarray(arr, float)
-    if closed and not (a[0] == a[-1]).all():
-        a = np.vstack([a, a[0]])
-    return np.concatenate([a[:-1], a[1:]], axis=1)
 
 
 def _segs_any_intersect(A: np.ndarray, B: np.ndarray) -> bool:
@@ -209,22 +210,11 @@ _FP_SCHEMA = T.StructType(
 # tests), and whether it is areal (enables the reverse-containment
 # test). Built once in the project UDF; every downstream predicate is
 # a JVM higher-order lambda over these arrays.
-_VERT = T.StructType(
-    [T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())]
-)
-_SEG = T.StructType(
-    [
-        T.StructField("x1", T.DoubleType()),
-        T.StructField("y1", T.DoubleType()),
-        T.StructField("x2", T.DoubleType()),
-        T.StructField("y2", T.DoubleType()),
-    ]
-)
 _PART = T.StructType(
     [
         T.StructField("areal", T.BooleanType()),
-        T.StructField("verts", T.ArrayType(_VERT)),
-        T.StructField("segs", T.ArrayType(_SEG)),
+        T.StructField("verts", T.ArrayType(VERT)),
+        T.StructField("segs", T.ArrayType(EDGE)),
     ]
 )
 _FP_PARTS_SCHEMA = T.StructType(
@@ -264,17 +254,14 @@ def _parts_rows(parts: list) -> list:
     return out
 
 
-@pandas_udf(_FP_PARTS_SCHEMA)
-def _fp_project_parts(fp: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-    """Parse + project each row's join geometry once -> (parts, bbox).
-    Same parse/substitution rules as _fp_project_wkb; emits the nested
-    part arrays instead of WKB."""
-    n = len(fp)
-    rows: list = [None] * n
-    bb = np.full((n, 4), np.nan)
+def _join_geoms(fp: pd.Series, lon: pd.Series, lat: pd.Series):
+    """(row index, projected geometry, its parts, bbox) for every row
+    with a join geometry. G4 substitution: a NULL/POINT/EMPTY footprint
+    with coordinates joins as the point; rows with neither a parseable
+    footprint nor coordinates are skipped."""
     lon_v = lon.to_numpy(dtype=float, na_value=np.nan)
     lat_v = lat.to_numpy(dtype=float, na_value=np.nan)
-    for i in range(n):
+    for i in range(len(fp)):
         w = fp.iloc[i]
         substitute = w is None or w.startswith("POINT") or "EMPTY" in w
         if substitute and np.isfinite(lon_v[i]) and np.isfinite(lat_v[i]):
@@ -287,15 +274,37 @@ def _fp_project_parts(fp: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.DataF
             except Exception:
                 continue
         p = _project_geom(g)
-        box = _geom_bbox(p)
-        if box is None:
-            continue
         parts: list = []
         _flatten_parts(p, parts)
+        if parts:
+            yield i, p, parts, _parts_bbox(parts)
+
+
+@pandas_udf(_FP_PARTS_SCHEMA)
+def _fp_project_parts(fp: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
+    """Parse + project each row's join geometry once -> (parts, bbox)."""
+    n = len(fp)
+    rows: list = [None] * n
+    bb = np.full((n, 4), np.nan)
+    for i, _, parts, box in _join_geoms(fp, lon, lat):
         rows[i] = _parts_rows(parts)
         bb[i] = box
     return pd.DataFrame(
         {"parts": rows, "x0": bb[:, 0], "y0": bb[:, 1], "x1": bb[:, 2], "y1": bb[:, 3]}
+    )
+
+
+@pandas_udf(_FP_SCHEMA)
+def _fp_project_wkb(fp: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
+    """Parse + project each row's join geometry once -> (wkb, bbox)."""
+    n = len(fp)
+    wkbs: list = [None] * n
+    bb = np.full((n, 4), np.nan)
+    for i, p, _, box in _join_geoms(fp, lon, lat):
+        wkbs[i] = to_wkb(p)
+        bb[i] = box
+    return pd.DataFrame(
+        {"wkb": wkbs, "x0": bb[:, 0], "y0": bb[:, 1], "x1": bb[:, 2], "y1": bb[:, 3]}
     )
 
 
@@ -334,35 +343,7 @@ def _x_seg_int(a, b):
     return proper | touch
 
 
-def _x_parity(v, segs):
-    """Column twin of _pip_mask/_in_rings over a flat segment array:
-    even-odd crossing parity of point v (same crossing formula and
-    operation order as the numpy kernel)."""
-    return (
-        F.aggregate(
-            segs,
-            F.lit(0),
-            lambda acc, ed: acc
-            + F.when(
-                ((ed["y1"] > v["y"]) != (ed["y2"] > v["y"]))
-                & (
-                    v["x"]
-                    < (ed["x2"] - ed["x1"]) * (v["y"] - ed["y1"])
-                    / (ed["y2"] - ed["y1"]) + ed["x1"]
-                ),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-        % 2
-        == 1
-    )
-
-
-def _geom_bbox(g: Geom) -> tuple[float, float, float, float] | None:
-    parts: list = []
-    _flatten_parts(g, parts)
-    if not parts:
-        return None
+def _parts_bbox(parts: list) -> tuple[float, float, float, float]:
     arrs = []
     for kind, arr in parts:
         arrs.extend(arr if kind == "poly" else [arr])
@@ -372,38 +353,6 @@ def _geom_bbox(g: Geom) -> tuple[float, float, float, float] | None:
         float(allv[:, 1].min()),
         float(allv[:, 0].max()),
         float(allv[:, 1].max()),
-    )
-
-
-@pandas_udf(_FP_SCHEMA)
-def _fp_project_wkb(fp: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-    """Parse + project each row's join geometry once -> (wkb, bbox).
-    G4 substitution: NULL/POINT/EMPTY footprint + coords -> the point."""
-    n = len(fp)
-    wkbs: list = [None] * n
-    bb = np.full((n, 4), np.nan)
-    lon_v = lon.to_numpy(dtype=float, na_value=np.nan)
-    lat_v = lat.to_numpy(dtype=float, na_value=np.nan)
-    for i in range(n):
-        w = fp.iloc[i]
-        substitute = w is None or w.startswith("POINT") or "EMPTY" in w
-        if substitute and np.isfinite(lon_v[i]) and np.isfinite(lat_v[i]):
-            g = Geom("POINT", np.array([lon_v[i], lat_v[i]]))
-        elif w is None:
-            continue
-        else:
-            try:
-                g = parse_wkt(w)
-            except Exception:
-                continue
-        p = _project_geom(g)
-        box = _geom_bbox(p)
-        if box is None:
-            continue
-        wkbs[i] = to_wkb(p)
-        bb[i] = box
-    return pd.DataFrame(
-        {"wkb": wkbs, "x0": bb[:, 0], "y0": bb[:, 1], "x1": bb[:, 2], "y1": bb[:, 3]}
     )
 
 
@@ -424,326 +373,80 @@ def footprint_join(
 
     refine="expr" (default) runs the exact intersects predicate as
     nested JVM higher-order lambdas over the footprint's part arrays
-    and the polygon's broadcast edge/vertex arrays — after the single
+    and the cover's edge/vertex arrays — after the single
     parse/project UDF, no Python touches the hot path. refine="pandas"
-    keeps the WKB + numpy backend (wins for very vertex-heavy
-    geometries, same tradeoff as pip_join). Both evaluate identical
+    parses the footprint to WKB instead and runs the numpy predicate
+    against a driver-broadcast ring table. Both evaluate identical
     float predicates in identical operation order — bit-identical
-    outputs (asserted by test_joins.py)."""
-    if refine == "expr":
-        return _footprint_join_expr(
-            spark, pages, polygons, cell_km, key_col, fp_col, lon_col, lat_col
-        )
-    if refine != "pandas":
+    outputs (asserted by test_joins.py). Measured as for pip_join
+    (local[4], sf0.01 pages, densified synthetic layer, three calls),
+    expr vs pandas: median 10 vertices per polygon 4.3-7.0 s vs
+    4.7-6.5 s; median 100 vertices 6.8-7.6 s vs 4.7-5.1 s — the
+    segment-pair lambda is O(footprint segments x polygon edges), so
+    numpy wins on edge-heavy layers."""
+    if refine not in ("expr", "pandas"):
         raise ValueError(f"unknown refine backend {refine!r}")
-    idx = build_polygon_index(spark, polygons, cell_km)
-    bc = spark.sparkContext.broadcast(
-        {int(p): (r, tuple(map(float, b))) for p, r, b in zip(idx.poly_ids, idx.rings, idx.bboxes)}
-    )
-    cover = spark.createDataFrame(
-        idx.cover(), schema="cell_n long, cell_e long, poly_id long"
+    project, geom = (
+        (_fp_project_parts, "parts") if refine == "expr" else (_fp_project_wkb, "wkb")
     )
     s = cell_km * 1000
-
     probe = (
         pages.select(
             key_col,
-            _fp_project_wkb(F.col(fp_col), F.col(lon_col), F.col(lat_col)).alias("_g"),
+            project(F.col(fp_col), F.col(lon_col), F.col(lat_col)).alias("_g"),
         )
         .select(key_col, "_g.*")
-        .where(F.col("wkb").isNotNull())
-        .withColumn(
-            "cell_n",
-            F.explode(F.sequence(F.floor(F.col("y0") / s), F.floor(F.col("y1") / s))),
-        )
-        .withColumn(
-            "cell_e",
-            F.explode(F.sequence(F.floor(F.col("x0") / s), F.floor(F.col("x1") / s))),
-        )
-        .join(F.broadcast(cover), ["cell_n", "cell_e"])
+        .where(F.col(geom).isNotNull())
     )
-
-    @pandas_udf(T.BooleanType())
-    def refine(
-        wkb: pd.Series,
-        x0: pd.Series,
-        y0: pd.Series,
-        pid: pd.Series,
-        cell_n: pd.Series,
-        cell_e: pd.Series,
-    ) -> pd.Series:
-        table = bc.value
-        fx0 = x0.to_numpy()
-        fy0 = y0.to_numpy()
-        pv = pid.to_numpy()
-        cn = cell_n.to_numpy()
-        ce = cell_e.to_numpy()
-        out = np.zeros(len(pv), dtype=bool)
-        cache: dict[int, list] = {}
-        for i in range(len(pv)):
-            rings, (px0, py0, _, _) = table[int(pv[i])]
-            # reporting-cell dedup: only the cell holding the bbox
-            # intersection's lower-left corner emits this pair
-            if int(np.floor(max(fy0[i], py0) / s)) != cn[i]:
-                continue
-            if int(np.floor(max(fx0[i], px0) / s)) != ce[i]:
-                continue
-            key = wkb.iloc[i]
-            parts = cache.get(key)
-            if parts is None:
-                parts = []
-                _flatten_parts(from_wkb(key), parts)
-                cache[key] = parts
-            out[i] = geom_intersects_rings(parts, rings)
-        return pd.Series(out)
-
-    return probe.filter(
-        refine(
-            F.col("wkb"),
-            F.col("x0"),
-            F.col("y0"),
-            F.col("poly_id"),
-            F.col("cell_n"),
-            F.col("cell_e"),
-        )
-    ).select(key_col, "poly_id")
-
-
-def _footprint_join_expr(
-    spark: SparkSession,
-    pages: DataFrame,
-    polygons: DataFrame,
-    cell_km: int,
-    key_col: str,
-    fp_col: str,
-    lon_col: str,
-    lat_col: str,
-) -> DataFrame:
-    """JVM-expression backend of footprint_join: intersects =
-    any footprint vertex inside the polygon (even-odd parity), OR any
-    (footprint segment x polygon edge) pair crossing/touching, OR —
-    for areal parts — any polygon vertex inside the part. One
-    broadcast-hash join + interpreted lambdas; zero Python after the
-    parse/project UDF, zero shuffle, reporting-cell dedup as plain
-    column arithmetic."""
-    idx = build_polygon_index(spark, polygons, cell_km)
-    cover_rows = []
-    s = cell_km * 1000
-    for i, (pid, (x0, y0, x1, y1)) in enumerate(zip(idx.poly_ids, idx.bboxes)):
-        edges = [tuple(map(float, e)) for e in idx.edges_flat(i)]
-        verts = [
-            (float(x), float(y))
-            for ring in idx.rings[i]
-            for x, y in np.asarray(ring, float)
-        ]
-        for nb in range(int(np.floor(y0 / s)), int(np.floor(y1 / s)) + 1):
-            for eb in range(int(np.floor(x0 / s)), int(np.floor(x1 / s)) + 1):
-                cover_rows.append(
-                    (nb, eb, int(pid), edges, verts,
-                     float(x0), float(y0), float(x1), float(y1))
-                )
-    cover = spark.createDataFrame(
-        cover_rows,
-        schema=(
-            "cell_n long, cell_e long, poly_id long, "
-            "poly_edges array<struct<x1:double,y1:double,x2:double,y2:double>>, "
-            "poly_verts array<struct<x:double,y:double>>, "
-            "bx0 double, by0 double, bx1 double, by1 double"
-        ),
-    )
-
-    probe = (
-        pages.select(
-            key_col,
-            _fp_project_parts(F.col(fp_col), F.col(lon_col), F.col(lat_col)).alias("_g"),
-        )
-        .select(key_col, "_g.*")
-        .where(F.col("parts").isNotNull())
-        .withColumn(
-            "cell_n",
-            F.explode(F.sequence(F.floor(F.col("y0") / s), F.floor(F.col("y1") / s))),
-        )
-        .withColumn(
-            "cell_e",
-            F.explode(F.sequence(F.floor(F.col("x0") / s), F.floor(F.col("x1") / s))),
-        )
-        .join(F.broadcast(cover), ["cell_n", "cell_e"])
-        # reporting-cell dedup (same arithmetic as the pandas refine):
-        # only the cell holding the bbox-intersection's lower-left
-        # corner emits a (footprint, polygon) pair
+    cand = (
+        bbox_cells(probe, cell_km, "x0", "y0", "x1", "y1")
+        .join(polygon_cover(polygons, cell_km), ["cell_n", "cell_e"])
+        # reporting-cell dedup: only the cell holding the
+        # bbox-intersection's lower-left corner emits a (footprint,
+        # polygon) pair
         .where(
             (F.floor(F.greatest(F.col("y0"), F.col("by0")) / s) == F.col("cell_n"))
             & (F.floor(F.greatest(F.col("x0"), F.col("bx0")) / s) == F.col("cell_e"))
         )
         # bbox overlap prefilter: bbox-disjoint geometries cannot
-        # intersect, so this prunes lambda work without changing output
+        # intersect, so this prunes refine work without changing output
         .where(
             (F.col("x0") <= F.col("bx1")) & (F.col("x1") >= F.col("bx0"))
             & (F.col("y0") <= F.col("by1")) & (F.col("y1") >= F.col("by0"))
         )
     )
 
-    hit = F.exists(
-        "parts",
-        lambda part: (
-            F.exists(part["verts"], lambda v: _x_parity(v, F.col("poly_edges")))
-            | F.exists(
-                part["segs"],
-                lambda sg: F.exists(F.col("poly_edges"), lambda ed: _x_seg_int(sg, ed)),
-            )
-            | (
-                part["areal"]
-                & F.exists(F.col("poly_verts"), lambda v: _x_parity(v, part["segs"]))
-            )
-        ),
-    )
-    return probe.where(hit).select(key_col, "poly_id")
-
-
-def footprint_join_partitioned(
-    spark: SparkSession,
-    pages: DataFrame,
-    polygons: DataFrame,
-    cell_km: int = 10,
-    key_col: str = "url",
-    fp_col: str = "footprint",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    max_cell_rows: int = 2_000_000,
-    materialize: bool = True,
-) -> DataFrame:
-    """Exact intersects join with a DISTRIBUTED layer side — the
-    footprint counterpart of pip_join_partitioned: same output as
-    footprint_join, no driver-built index, no broadcast requirement.
-
-    Both sides shuffle once on the prefilter cell: footprints are
-    parsed/projected ONCE (the same single-UDF stage as the broadcast
-    path) and replicated per covered cell; the layer arrives as the
-    (cell, poly_id, rings_wkb, bbox) cover table built inside
-    executors (joins/pip.polygon_cover_table), so each polygon's ring
-    payload crosses the wire once per covered cell, never per
-    candidate pair. Inside each cogroup cell the exact
-    geom_intersects_rings predicate runs on bbox-overlapping pairs;
-    multi-cell duplicates are suppressed by the same reporting-cell
-    rule as the broadcast path (only the cell holding the bbox
-    intersection's lower-left corner emits a pair), so no distinct
-    shuffle exists anywhere.
-
-    Hot cells are sub-split exactly like pip_join_partitioned: cells
-    with more than max_cell_rows replicated footprint rows salt their
-    probes by key hash and replicate the cover per salt — each pair
-    still meets exactly once (the footprint exists in one salt group).
-    """
-    from fgcspark.joins.pip import hot_cell_factors, polygon_cover_table
-
-    s = cell_km * 1000
-    cover = polygon_cover_table(polygons, cell_km)
-    probe = (
-        pages.select(
-            key_col,
-            _fp_project_wkb(F.col(fp_col), F.col(lon_col), F.col(lat_col)).alias("_g"),
+    if refine == "expr":
+        hit = F.exists(
+            "parts",
+            lambda part: (
+                F.exists(part["verts"], lambda v: crossing_parity(v, F.col("edges")))
+                | F.exists(
+                    part["segs"],
+                    lambda sg: F.exists(F.col("edges"), lambda ed: _x_seg_int(sg, ed)),
+                )
+                | (
+                    part["areal"]
+                    & F.exists(F.col("verts"), lambda v: crossing_parity(v, part["segs"]))
+                )
+            ),
         )
-        .select(key_col, "_g.*")
-        .where(F.col("wkb").isNotNull())
-        .withColumn(
-            "cell_n",
-            F.explode(F.sequence(F.floor(F.col("y0") / s), F.floor(F.col("y1") / s))),
-        )
-        .withColumn(
-            "cell_e",
-            F.explode(F.sequence(F.floor(F.col("x0") / s), F.floor(F.col("x1") / s))),
-        )
-    )
-    # persist: the hot-cell factor aggregate and the cogroup both read
-    # the parsed projection — without the cache the parse UDF runs twice
-    from pyspark.storagelevel import StorageLevel
+        return cand.where(hit).select(key_col, "poly_id")
 
-    probe = probe.persist(StorageLevel.MEMORY_AND_DISK)
-    probe_cached = probe  # hold: released in the finally below
+    bc = spark.sparkContext.broadcast(build_polygon_index(spark, polygons, cell_km).ring_table())
 
-    group_cols = ["cell_n", "cell_e"]
-    factors = hot_cell_factors(spark, probe.select("cell_n", "cell_e"), max_cell_rows)
-    if factors is not None:
-        probe = (
-            probe.join(F.broadcast(factors), ["cell_n", "cell_e"], "left")
-            .withColumn(
-                "salt",
-                F.when(F.col("m").isNull(), F.lit(0)).otherwise(
-                    F.pmod(F.xxhash64(F.col(key_col)), F.col("m")).cast("int")
-                ),
-            )
-            .drop("m")
-        )
-        cover = (
-            cover.join(F.broadcast(factors), ["cell_n", "cell_e"], "left")
-            .withColumn(
-                "salt",
-                F.explode(
-                    F.sequence(F.lit(0), F.coalesce(F.col("m"), F.lit(1)) - 1)
-                ),
-            )
-            .drop("m")
-        )
-        group_cols = ["cell_n", "cell_e", "salt"]
+    @pandas_udf(T.BooleanType())
+    def refine_udf(wkb: pd.Series, pid: pd.Series) -> pd.Series:
+        table = bc.value
+        out = np.zeros(len(pid), dtype=bool)
+        cache: dict[bytes, list] = {}
+        for i, (key, p) in enumerate(zip(wkb, pid)):
+            parts = cache.get(key)
+            if parts is None:
+                parts = []
+                _flatten_parts(from_wkb(key), parts)
+                cache[key] = parts
+            out[i] = geom_intersects_rings(parts, table[int(p)])
+        return pd.Series(out)
 
-    out_schema = T.StructType(
-        [T.StructField(key_col, T.StringType()), T.StructField("poly_id", T.LongType())]
-    )
-
-    def refine(key, fp_pdf, cov_pdf):
-        empty = pd.DataFrame(
-            {key_col: pd.Series(dtype="object"), "poly_id": pd.Series(dtype="int64")}
-        )
-        if len(fp_pdf) == 0 or len(cov_pdf) == 0:
-            return empty
-        cn, ce = int(key[0]), int(key[1])
-        fx0 = fp_pdf["x0"].to_numpy()
-        fy0 = fp_pdf["y0"].to_numpy()
-        fx1 = fp_pdf["x1"].to_numpy()
-        fy1 = fp_pdf["y1"].to_numpy()
-        keys = fp_pdf[key_col].to_numpy()
-        wkbs = fp_pdf["wkb"]
-        parts_cache: dict[int, list] = {}
-        out_k, out_p = [], []
-        for row in cov_pdf.itertuples(index=False):
-            ov = (fx0 <= row.x1) & (fx1 >= row.x0) & (fy0 <= row.y1) & (fy1 >= row.y0)
-            if not ov.any():
-                continue
-            # reporting-cell dedup (vectorized): the cell of the bbox
-            # intersection's lower-left corner must be THIS cell
-            rep = (
-                np.floor(np.maximum(fy0, row.y0) / s).astype("int64") == cn
-            ) & (np.floor(np.maximum(fx0, row.x0) / s).astype("int64") == ce)
-            sel = np.nonzero(ov & rep)[0]
-            if not sel.size:
-                continue
-            rings = list(from_wkb(bytes(row.rings_wkb)).coords)
-            for i in sel:
-                parts = parts_cache.get(i)
-                if parts is None:
-                    parts = []
-                    _flatten_parts(from_wkb(bytes(wkbs.iloc[int(i)])), parts)
-                    parts_cache[int(i)] = parts
-                if geom_intersects_rings(parts, rings):
-                    out_k.append(keys[i])
-                    out_p.append(int(row.poly_id))
-        if not out_k:
-            return empty
-        return pd.DataFrame({key_col: out_k, "poly_id": out_p})
-
-    res = (
-        probe.groupBy(*group_cols)
-        .cogroup(cover.groupBy(*group_cols))
-        .applyInPandas(refine, out_schema)
-    )
-    if not materialize:
-        # caller gets the lazy cogroup plan (plan inspection /
-        # composition) and owns releasing the cached probe projection
-        return res
-    # materialize the (small) pair result, then release the cached probe
-    # projection — mirrors joins/knn.py's hold/finally pattern so
-    # repeated calls in a long session don't accumulate cached blocks
-    try:
-        return res.localCheckpoint(eager=True)
-    finally:
-        probe_cached.unpersist()
+    return cand.filter(refine_udf(F.col("wkb"), F.col("poly_id"))).select(key_col, "poly_id")

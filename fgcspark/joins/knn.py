@@ -82,8 +82,7 @@ def knn_join_partitioned(
     candidate row ever through the driver.
 
     The distributed twin of knn_join, for probe sets that scale with
-    the data (the same relationship pip_join_partitioned has to
-    pip_join). Same certification bound and tie rules, different
+    the data. Same certification bound and tie rules, different
     physical shape:
 
     - probes are projected to EPSG:3067 by the SAME numpy kernel as
@@ -232,8 +231,7 @@ def knn_join(
     prows = probes.select("probe_id", "lon", "lat").limit(_MAX_PROBES + 1).collect()
     assert len(prows) <= _MAX_PROBES, (
         f"knn_join holds probes on the driver; got >{_MAX_PROBES} rows — "
-        "for probe sets that scale with the data use a cell-cogroup "
-        "join (see joins/pip.py pip_join_partitioned) instead"
+        "for probe sets that scale with the data use knn_join_partitioned"
     )
     pid = np.array([r["probe_id"] for r in prows], dtype=np.int64)
     pe, pn = tm.geodetic_to_tm35(

@@ -3,20 +3,27 @@
 The reference has no spatial join (its only join is the facts pivot,
 R/finbif_geo_convert.R:83); this operator is the graft requirement
 (BASELINE.json north_rule): join a huge page table (points in
-EPSG:3067) against a small polygon layer.
+EPSG:3067) against a polygon layer.
 
-Physical strategy (SURVEY.md §4 rewrite #1):
-1. driver-side: parse + project the polygon layer once, build the cell
-   cover of each polygon's bbox at a prefilter grid size, and an
-   STR-style sorted bbox array for the in-batch refine;
-2. candidates = pages equi-joined (broadcast hash join, zero shuffle)
-   to the (cell_key, poly_id) cover table on the page's cell key;
-3. exact crossing-number refine in one Arrow-batched pandas UDF,
-   vectorized per polygon over its candidate points.
+One physical plan, shared by pip_join, pip_anti_join and
+joins/fpjoin.footprint_join:
+1. polygon_cover builds the layer on the executors: one mapInPandas
+   parses and projects each polygon and emits one row per polygon
+   (poly_id, flat edge array, vertex array, bbox); the bbox cell cover
+   at the prefilter grid is exploded JVM-side with sequence()/explode;
+2. the probe is equi-joined to that cover on (cell_n, cell_e) with no
+   join hint. Spark picks a broadcast hash join while the cover is
+   under spark.sql.autoBroadcastJoinThreshold (session.py) — the
+   probe then streams through the scan with no shuffle — and a
+   sort-merge join above it, where AQE's skew-join splitting takes
+   care of hot cells. A caller forces the shuffle strategy by hinting
+   its own probe input (``points.hint("merge")``);
+3. the exact even-odd crossing-number refine runs as a JVM
+   higher-order lambda over the polygon's edge array (crossing_parity).
 
-At 100 TB the probe side streams through the scan once: no shuffle, no
-sort, no skew sensitivity (broadcast joins replicate the build side, so
-hot cells cost only the refine, which is O(candidates) vectorized).
+refine="pandas" swaps step 3 for an Arrow-batched numpy kernel over a
+driver-broadcast ring table (build_polygon_index). See pip_join for
+when each refine wins.
 """
 
 from __future__ import annotations
@@ -33,16 +40,66 @@ from fgcspark.geom.wkt import parse_wkt
 
 DEFAULT_CELL_KM = 50
 
+# the one edge struct of every crossing test: polygon layer edges and
+# footprint segments alike
+EDGE = T.StructType(
+    [
+        T.StructField("x1", T.DoubleType()),
+        T.StructField("y1", T.DoubleType()),
+        T.StructField("x2", T.DoubleType()),
+        T.StructField("y2", T.DoubleType()),
+    ]
+)
+VERT = T.StructType(
+    [T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())]
+)
+_LAYER_SCHEMA = T.StructType(
+    [
+        T.StructField("poly_id", T.LongType()),
+        T.StructField("edges", T.ArrayType(EDGE)),
+        T.StructField("verts", T.ArrayType(VERT)),
+        T.StructField("bx0", T.DoubleType()),
+        T.StructField("by0", T.DoubleType()),
+        T.StructField("bx1", T.DoubleType()),
+        T.StructField("by1", T.DoubleType()),
+    ]
+)
+
+
+def _polygon_rings(wkt: str) -> list[np.ndarray]:
+    """Parse one layer polygon and project its rings to EPSG:3067.
+
+    Returns the LIST of rings — exterior ring(s) plus interior holes;
+    MULTIPOLYGON parts contribute their rings to the same list.
+    Containment is even-odd: XOR of per-ring crossing parity, which
+    handles holes and disjoint parts uniformly."""
+    g = parse_wkt(wkt)
+    if g.gtype == "MULTIPOLYGON":
+        raw = [ring for part in g.coords for ring in part]
+    else:  # POLYGON: coords is the ring list (exterior + holes)
+        raw = list(g.coords)
+    out = []
+    for ring in raw:
+        e, n = tm.geodetic_to_tm35(ring[:, 0], ring[:, 1])
+        out.append(np.stack([e, n], axis=1))
+    return out
+
+
+def _ring_segs(arr: np.ndarray, closed: bool) -> np.ndarray:
+    """(k,2) vertices -> (k|k-1, 4) segments [x1 y1 x2 y2]. A closed
+    ring keeps one segment per vertex pair (an unclosed ring is closed
+    first); an open line has no closing segment."""
+    a = np.asarray(arr, float)
+    if closed and not (a[0] == a[-1]).all():
+        a = np.vstack([a, a[0]])
+    return np.concatenate([a[:-1], a[1:]], axis=1)
+
 
 class PolygonIndex:
-    """Driver-built broadcastable polygon index: projected rings +
-    bboxes sorted by xmin (STR-flavored: binary-searchable envelope
-    array) + cell cover table.
+    """Driver-side polygon layer: projected rings + bboxes, for the
+    numpy refines and for checks that need the rings in hand.
 
-    `rings[i]` is the LIST of rings of polygon i — exterior ring(s)
-    plus interior holes; MULTIPOLYGON parts contribute their rings to
-    the same list. Containment is even-odd: XOR of per-ring crossing
-    parity, which handles holes and disjoint parts uniformly."""
+    `rings[i]` is the ring list of polygon i (_polygon_rings)."""
 
     def __init__(self, poly_ids: list[int], rings: list[list[np.ndarray]], cell_km: int):
         self.cell_km = cell_km
@@ -70,58 +127,68 @@ class PolygonIndex:
                     out.append((nb, eb, int(pid)))
         return out
 
-    def edges_flat(self, i: int) -> list[tuple[float, float, float, float]]:
-        """All edges of polygon index i as (x0, y0, x1, y1) tuples —
-        every ring contributes its consecutive vertex pairs (closed
-        rings drop the duplicate closing vertex). Even-odd containment
-        = parity of total crossings over this flat list, because the
-        parity of a sum is the XOR of per-ring parities."""
-        out = []
-        for ring in self.rings[i]:
-            closed = bool((ring[0] == ring[-1]).all())
-            a = ring[:-1] if closed else ring
-            b = ring[1:] if closed else np.roll(ring, -1, axis=0)
-            for (ex0, ey0), (ex1, ey1) in zip(a, b):
-                out.append((float(ex0), float(ey0), float(ex1), float(ey1)))
-        return out
-
-    def cover_with_edges(self):
-        """cover() rows extended with the polygon's flat edge array and
-        bbox — the broadcast build side of the JVM-expression refine."""
-        s = self.cell_km * 1000
-        out = []
-        for i, (pid, (x0, y0, x1, y1)) in enumerate(zip(self.poly_ids, self.bboxes)):
-            edges = self.edges_flat(i)
-            for nb in range(int(np.floor(y0 / s)), int(np.floor(y1 / s)) + 1):
-                for eb in range(int(np.floor(x0 / s)), int(np.floor(x1 / s)) + 1):
-                    out.append(
-                        (nb, eb, int(pid), edges,
-                         float(x0), float(y0), float(x1), float(y1))
-                    )
-        return out
+    def ring_table(self) -> dict:
+        """poly_id -> ring list: the broadcast payload of the numpy
+        refines."""
+        return {int(p): r for p, r in zip(self.poly_ids, self.rings)}
 
 
 def build_polygon_index(
     spark: SparkSession, polygons: DataFrame, cell_km: int = DEFAULT_CELL_KM
 ) -> PolygonIndex:
-    """Collect the (small) polygon layer, project to EPSG:3067, index.
-    The layer is broadcast once per job (reference analogue: the
-    polygon filters live server-side in laji.fi, SURVEY §2.3 J1 note)."""
+    """Collect the (small) polygon layer and project it to EPSG:3067."""
     rows = polygons.select("poly_id", "wkt").collect()
-    ids, rings = [], []
-    for r in rows:
-        g = parse_wkt(r["wkt"])
-        if g.gtype == "MULTIPOLYGON":
-            raw = [ring for part in g.coords for ring in part]
-        else:  # POLYGON: coords is the ring list (exterior + holes)
-            raw = list(g.coords)
-        projected = []
-        for ring in raw:
-            e, n = tm.geodetic_to_tm35(ring[:, 0], ring[:, 1])
-            projected.append(np.stack([e, n], axis=1))
-        ids.append(int(r["poly_id"]))
-        rings.append(projected)
-    return PolygonIndex(ids, rings, cell_km)
+    return PolygonIndex(
+        [int(r["poly_id"]) for r in rows],
+        [_polygon_rings(r["wkt"]) for r in rows],
+        cell_km,
+    )
+
+
+def _layer_rows(batches):
+    """mapInPandas body of polygon_cover: one row per polygon."""
+    for pdf in batches:
+        rows = []
+        for pid, wkt in zip(pdf["poly_id"], pdf["wkt"]):
+            rings = _polygon_rings(wkt)
+            v = np.vstack(rings)
+            edges = np.vstack([_ring_segs(r, closed=True) for r in rings])
+            rows.append(
+                (
+                    int(pid),
+                    list(map(tuple, edges.tolist())),
+                    list(map(tuple, v.tolist())),
+                    float(v[:, 0].min()),
+                    float(v[:, 1].min()),
+                    float(v[:, 0].max()),
+                    float(v[:, 1].max()),
+                )
+            )
+        if rows:
+            yield pd.DataFrame(rows, columns=_LAYER_SCHEMA.names)
+
+
+def polygon_cover(polygons: DataFrame, cell_km: int = DEFAULT_CELL_KM) -> DataFrame:
+    """The layer side of every spatial join, built on the executors:
+    (cell_n, cell_e, poly_id, edges, verts, bx0, by0, bx1, by1), one
+    row per (prefilter cell, polygon) over each polygon's bbox — the
+    same cells as PolygonIndex.cover(). Each polygon is parsed and
+    projected once; only the JVM explode repeats its row per cell.
+    Nothing is collected to the driver, so the layer may be as large as
+    the cluster can join."""
+    layer = polygons.select("poly_id", "wkt").mapInPandas(_layer_rows, _LAYER_SCHEMA)
+    return bbox_cells(layer, cell_km, "bx0", "by0", "bx1", "by1")
+
+
+def bbox_cells(df: DataFrame, cell_km: int, x0: str, y0: str, x1: str, y1: str) -> DataFrame:
+    """One row per (cell_n, cell_e) prefilter cell that each row's bbox
+    touches, exploded JVM-side with sequence()/explode."""
+    s = cell_km * 1000
+    return df.withColumn(
+        "cell_n", F.explode(F.sequence(F.floor(F.col(y0) / s), F.floor(F.col(y1) / s)))
+    ).withColumn(
+        "cell_e", F.explode(F.sequence(F.floor(F.col(x0) / s), F.floor(F.col(x1) / s)))
+    )
 
 
 def _pip_mask(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
@@ -145,78 +212,61 @@ def _pip_mask(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
     return crossing.sum(axis=1) % 2 == 1
 
 
-_INDEX_CACHE: dict = {}
-
-
-def _plan_fingerprint(df: DataFrame) -> str:
-    """Cheap no-job fingerprint of a DataFrame's logical plan — catches
-    a cache_key being reused after the polygon input changed (different
-    path / filter / schema). In-place mutation of the same files is
-    not detectable this way; cache_key remains the caller's contract
-    for that case."""
-    try:
-        return df._jdf.queryExecution().logical().toString()
-    except Exception:  # pragma: no cover - connect-mode fallback
-        return str(df.schema)
-
-
-def cached_index(
-    spark: SparkSession, polygons: DataFrame, cell_km: int, cache_key: str
-):
-    """Build the polygon index + its broadcast once per (key, cell_km)
-    and reuse across jobs — the build side of this join is immutable
-    for the lifetime of a scan, so one driver-side build amortizes over
-    the entire (100 TB) probe table.
-
-    Keyed by SparkContext applicationId + the polygon plan fingerprint
-    so a cached Broadcast never outlives its owning context and never
-    serves a different polygon layer; entries from stopped contexts
-    are evicted on the next miss."""
-    sc = spark.sparkContext
-    app_id = sc.applicationId
-    k = (app_id, cache_key, cell_km, _plan_fingerprint(polygons))
-    if k not in _INDEX_CACHE:
-        for old in [key for key in _INDEX_CACHE if key[0] != app_id]:
-            del _INDEX_CACHE[old]
-        idx = build_polygon_index(spark, polygons, cell_km)
-        bc = sc.broadcast(
-            {int(p): (r, b) for p, r, b in zip(idx.poly_ids, idx.rings, idx.bboxes)}
+def crossing_parity(v, edges):
+    """Even-odd ray-crossing parity of the point struct `v` (x, y)
+    against an EDGE array, as a JVM higher-order aggregate lambda —
+    the column twin of _pip_mask, with the crossing formula in the same
+    IEEE-double operation order (bit-identical results)."""
+    return (
+        F.aggregate(
+            edges,
+            F.lit(0),
+            lambda acc, ed: acc
+            + F.when(
+                ((ed["y1"] > v["y"]) != (ed["y2"] > v["y"]))
+                & (
+                    v["x"]
+                    < (ed["x2"] - ed["x1"]) * (v["y"] - ed["y1"])
+                    / (ed["y2"] - ed["y1"]) + ed["x1"]
+                ),
+                F.lit(1),
+            ).otherwise(F.lit(0)),
         )
-        _INDEX_CACHE[k] = (idx, bc)
-    return _INDEX_CACHE[k]
-
-
-def _expr_cover(spark: SparkSession, idx) -> DataFrame:
-    """The broadcast build side of the expr backend: one row per
-    (covering cell, polygon) carrying the polygon's edge array + bbox."""
-    return spark.createDataFrame(
-        idx.cover_with_edges(),
-        schema=(
-            "cell_n long, cell_e long, poly_id long, "
-            "edges array<struct<x0:double,y0:double,x1:double,y1:double>>, "
-            "bx0 double, by0 double, bx1 double, by1 double"
-        ),
+        % 2
+        == 1
     )
 
 
-def _edge_crossings():
-    """Ray-crossing count of the current row's (e, n) point against the
-    row's `edges` array, as a JVM higher-order aggregate lambda — same
-    IEEE-double operation order as the numpy kernel (bit-identical)."""
-    return F.aggregate(
-        "edges",
-        F.lit(0),
-        lambda acc, ed: acc
-        + F.when(
-            ((ed["y0"] > F.col("n")) != (ed["y1"] > F.col("n")))
-            & (
-                F.col("e")
-                < (ed["x1"] - ed["x0"]) * (F.col("n") - ed["y0"])
-                / (ed["y1"] - ed["y0"]) + ed["x0"]
-            ),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
+def _point_candidates(
+    points: DataFrame, polygons: DataFrame, cell_km: int, key_col: str, how: str
+) -> DataFrame:
+    """Points equi-joined to the executor-built cover on their cell;
+    `how` is "inner" (pip_join) or "left" (pip_anti_join keeps
+    zero-candidate points). No join hint: Spark picks the strategy."""
+    s = cell_km * 1000
+    pts = points.select(
+        key_col,
+        "e",
+        "n",
+        F.floor(F.col("n") / s).cast("long").alias("cell_n"),
+        F.floor(F.col("e") / s).cast("long").alias("cell_e"),
     )
+    cover = polygon_cover(polygons, cell_km).drop("verts")
+    return pts.join(cover, ["cell_n", "cell_e"], how)
+
+
+def _in_bbox():
+    return (
+        (F.col("e") >= F.col("bx0")) & (F.col("e") <= F.col("bx1"))
+        & (F.col("n") >= F.col("by0")) & (F.col("n") <= F.col("by1"))
+    )
+
+
+def _point_inside():
+    """Exact containment of a candidate point in its cover row's
+    polygon: bbox prefilter, then crossing parity."""
+    point = F.struct(F.col("e").alias("x"), F.col("n").alias("y"))
+    return _in_bbox() & crossing_parity(point, F.col("edges"))
 
 
 def pip_join(
@@ -231,57 +281,37 @@ def pip_join(
     """Exact PIP join: returns (key_col, poly_id) rows.
 
     `points` must carry EPSG:3067 `e`/`n` columns (pipeline.with_tm35).
-    Pass cache_key to reuse the driver-built index across jobs.
+    The plan is the module's one join: executor-built cover, cell
+    equi-join with the strategy left to Spark, bbox prefilter, refine.
+    `cache_key` is accepted for compatibility and ignored: the layer
+    is part of the plan, so there is no driver-side index to reuse.
 
     Two refine backends, identical IEEE-double arithmetic (the crossing
-    formula `(x1-x0)*(py-y0)/(y1-y0)+x0` is evaluated in the same
+    formula `(x2-x1)*(py-y1)/(y2-y1)+x1` is evaluated in the same
     operation order, so results are bit-identical — asserted by
     test_joins.py):
 
-    - "expr" (default): crossing parity as a JVM higher-order
-      `aggregate` lambda over the polygon's broadcast edge array —
-      NO Python workers anywhere in the join, no Arrow IPC, no extra
-      process scheduling; the whole join is one broadcast-hash join
-      plus interpreted-expression filters. Cost is O(edges) per
-      candidate row in the JVM.
-    - "pandas": the Arrow-batched numpy kernel (vectorized per polygon
-      over its candidate batch). Wins when polygons are edge-heavy
-      (thousands of vertices), where the O(edges) interpreted lambda
-      loses to vectorized (candidates x edges) numpy blocks.
+    - "expr" (default): crossing_parity, a JVM higher-order
+      `aggregate` lambda over the polygon's edge array — no Python
+      workers in the join apart from the one layer-building task.
+      Cost is O(edges) interpreted work per candidate row.
+    - "pandas": the Arrow-batched numpy kernel, vectorized per polygon
+      over its candidate batch, against a driver-broadcast ring table.
+      Measured on local[4] (4 vCPU) over the sf0.01 pages and the
+      200-polygon synthetic layer, densified by inserting points along
+      every edge; three consecutive collecting calls each, expr vs
+      pandas: median 10 vertices per polygon (the layer as generated)
+      1.4-2.5 s vs 1.4-1.6 s; median 100 vertices 1.3-1.7 s vs
+      1.4-1.6 s; median 460 vertices 2.5-3.6 s vs 2.1-2.8 s. Numpy
+      pulls ahead only on edge-heavy layers.
     """
     if refine not in ("expr", "pandas"):
         raise ValueError(f"unknown refine backend {refine!r}")
-    if cache_key is not None:
-        idx, bc = cached_index(spark, polygons, cell_km, cache_key)
-    else:
-        idx = build_polygon_index(spark, polygons, cell_km)
-        bc = spark.sparkContext.broadcast(
-            {int(p): (r, b) for p, r, b in zip(idx.poly_ids, idx.rings, idx.bboxes)}
-        )
-    s = cell_km * 1000
-    cell_cols = [
-        F.floor(F.col("n") / s).cast("long").alias("cell_n"),
-        F.floor(F.col("e") / s).cast("long").alias("cell_e"),
-    ]
-
+    cand = _point_candidates(points, polygons, cell_km, key_col, "inner")
     if refine == "expr":
-        cover = _expr_cover(spark, idx)
-        cand = (
-            points.select(key_col, "e", "n", *cell_cols)
-            .join(F.broadcast(cover), ["cell_n", "cell_e"])
-            .where(
-                (F.col("e") >= F.col("bx0")) & (F.col("e") <= F.col("bx1"))
-                & (F.col("n") >= F.col("by0")) & (F.col("n") <= F.col("by1"))
-            )
-        )
-        return cand.where(_edge_crossings() % 2 == 1).select(key_col, "poly_id")
+        return cand.where(_point_inside()).select(key_col, "poly_id")
 
-    cover = spark.createDataFrame(
-        idx.cover(), schema="cell_n long, cell_e long, poly_id long"
-    )
-    cand = points.select(key_col, "e", "n", *cell_cols).join(
-        F.broadcast(cover), ["cell_n", "cell_e"]
-    )
+    bc = spark.sparkContext.broadcast(build_polygon_index(spark, polygons, cell_km).ring_table())
 
     @pandas_udf(T.BooleanType())
     def refine_udf(e: pd.Series, n: pd.Series, pid: pd.Series) -> pd.Series:
@@ -292,20 +322,15 @@ def pip_join(
         table = bc.value
         for p in np.unique(pv):
             sel = np.nonzero(pv == p)[0]
-            rings, (x0, y0, x1, y1) = table[int(p)]
-            px, py = ex[sel], ny[sel]
-            inbb = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
-            m = np.zeros(len(sel), dtype=bool)
-            if inbb.any():
-                ins = np.zeros(int(inbb.sum()), dtype=bool)
-                for ring in rings:  # even-odd across exteriors + holes
-                    ins ^= _pip_mask(px[inbb], py[inbb], ring)
-                m[inbb] = ins
-            out[sel] = m
+            ins = np.zeros(len(sel), dtype=bool)
+            for ring in table[int(p)]:  # even-odd across exteriors + holes
+                ins ^= _pip_mask(ex[sel], ny[sel], ring)
+            out[sel] = ins
         return pd.Series(out)
 
     return (
-        cand.filter(refine_udf(F.col("e"), F.col("n"), F.col("poly_id")))
+        cand.where(_in_bbox())
+        .filter(refine_udf(F.col("e"), F.col("n"), F.col("poly_id")))
         .select(key_col, "poly_id")
     )
 
@@ -322,230 +347,18 @@ def pip_anti_join(
     geotag-QA step that drops pages whose parsed coordinate lands
     outside every admin boundary).
 
-    Shape: the same broadcast (cell -> edge array) cover as pip_join's
-    expr backend, but joined LEFT OUTER so zero-candidate points
-    survive with a null build side, then ONE hash aggregate per point
+    Shape: pip_join's cover joined LEFT OUTER so zero-candidate points
+    survive with a null layer side, then ONE hash aggregate per point
     key (max of the per-candidate inside flag, map-side combined).
-    The point table is shuffled exactly once (the groupBy on its own
-    key); there is no anti join of two point-proportional tables and
-    no second scan of the points. All refine arithmetic is the same
-    JVM higher-order lambda as pip_join — no Python workers."""
-    idx = build_polygon_index(spark, polygons, cell_km)
-    s = cell_km * 1000
-    pts = points.select(
-        key_col,
-        "e",
-        "n",
-        F.floor(F.col("n") / s).cast("long").alias("cell_n"),
-        F.floor(F.col("e") / s).cast("long").alias("cell_e"),
-    )
-    cand = pts.join(F.broadcast(_expr_cover(spark, idx)), ["cell_n", "cell_e"], "left")
+    There is no anti join of two point-proportional tables and no
+    second scan of the points. The refine is pip_join's JVM lambda."""
+    cand = _point_candidates(points, polygons, cell_km, key_col, "left")
     inside = F.when(
-        F.col("poly_id").isNotNull()
-        & (F.col("e") >= F.col("bx0")) & (F.col("e") <= F.col("bx1"))
-        & (F.col("n") >= F.col("by0")) & (F.col("n") <= F.col("by1")),
-        (_edge_crossings() % 2 == 1).cast("int"),
+        F.col("poly_id").isNotNull() & _point_inside(), F.lit(1)
     ).otherwise(F.lit(0))
     return (
         cand.groupBy(key_col)
         .agg(F.max(inside).alias("_hit"))
         .where(F.col("_hit") == 0)
         .select(key_col)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Broadcast-free partitioned PIP: the build side as a distributed table
-# ---------------------------------------------------------------------------
-
-
-def polygon_cover_table(
-    polygons: DataFrame, cell_km: int = DEFAULT_CELL_KM
-) -> DataFrame:
-    """Distributed twin of PolygonIndex: parse + project each polygon
-    INSIDE executors, serialize its projected rings as WKB, and explode
-    its bbox cell cover -> (cell_n, cell_e, poly_id, rings_wkb, bbox).
-
-    Use when the polygon layer itself is too large to build on the
-    driver (pip_join's index path) — e.g. joining pages against every
-    admin boundary on earth. One row per (cell, polygon); downstream
-    the PIP join is a plain cell equi-join either side can shuffle on."""
-    s = cell_km * 1000
-    out_schema = T.StructType(
-        [
-            T.StructField("cell_n", T.LongType()),
-            T.StructField("cell_e", T.LongType()),
-            T.StructField("poly_id", T.LongType()),
-            T.StructField("rings_wkb", T.BinaryType()),
-            T.StructField("x0", T.DoubleType()),
-            T.StructField("y0", T.DoubleType()),
-            T.StructField("x1", T.DoubleType()),
-            T.StructField("y1", T.DoubleType()),
-        ]
-    )
-
-    def build(batches):
-        from fgcspark.geom.wkb import to_wkb
-        from fgcspark.geom.wkt import Geom
-
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("cell_n", "cell_e", "poly_id", "rings_wkb", "x0", "y0", "x1", "y1")}
-            for pid, wkt in zip(pdf["poly_id"], pdf["wkt"]):
-                g = parse_wkt(wkt)
-                if g.gtype == "MULTIPOLYGON":
-                    raw = [ring for part in g.coords for ring in part]
-                else:
-                    raw = list(g.coords)
-                proj = []
-                for ring in raw:
-                    e, n = tm.geodetic_to_tm35(ring[:, 0], ring[:, 1])
-                    proj.append(np.stack([e, n], axis=1))
-                allv = np.vstack(proj)
-                x0, y0 = float(allv[:, 0].min()), float(allv[:, 1].min())
-                x1, y1 = float(allv[:, 0].max()), float(allv[:, 1].max())
-                # rings as a metric-frame MULTILINESTRING WKB payload
-                wkb = to_wkb(Geom("MULTILINESTRING", proj))
-                for nb in range(int(np.floor(y0 / s)), int(np.floor(y1 / s)) + 1):
-                    for eb in range(int(np.floor(x0 / s)), int(np.floor(x1 / s)) + 1):
-                        rows["cell_n"].append(nb)
-                        rows["cell_e"].append(eb)
-                        rows["poly_id"].append(int(pid))
-                        rows["rings_wkb"].append(wkb)
-                        rows["x0"].append(x0)
-                        rows["y0"].append(y0)
-                        rows["x1"].append(x1)
-                        rows["y1"].append(y1)
-            yield pd.DataFrame(rows)
-
-    return polygons.select("poly_id", "wkt").mapInPandas(build, out_schema)
-
-
-def hot_cell_factors(
-    spark: SparkSession,
-    pts: DataFrame,
-    max_cell_points: int,
-) -> DataFrame | None:
-    """Sub-split factors for cells holding more than max_cell_points
-    points: (cell_n, cell_e, m) with m = ceil(n_pts / max_cell_points).
-
-    The collect is BOUNDED: only cells ABOVE the threshold come back,
-    and there are at most total_points / max_cell_points of them —
-    the same aggregate-only control-plane contract as knn_join's
-    certification collect (never point rows)."""
-    import math
-
-    hot = (
-        pts.groupBy("cell_n", "cell_e")
-        .agg(F.count(F.lit(1)).alias("n_pts"))
-        .where(F.col("n_pts") > max_cell_points)
-        .collect()
-    )
-    if not hot:
-        return None
-    rows = [
-        (int(r["cell_n"]), int(r["cell_e"]), int(math.ceil(r["n_pts"] / max_cell_points)))
-        for r in hot
-    ]
-    return spark.createDataFrame(rows, schema="cell_n long, cell_e long, m int")
-
-
-def pip_join_partitioned(
-    spark: SparkSession,
-    points: DataFrame,
-    polygons: DataFrame,
-    cell_km: int = DEFAULT_CELL_KM,
-    key_col: str = "url",
-    max_cell_points: int = 2_000_000,
-) -> DataFrame:
-    """Exact PIP join with a DISTRIBUTED build side: same output as
-    pip_join, no driver-side index, no broadcast requirement.
-
-    Shape: points and the cover table are COGROUPED by cell — both
-    sides shuffle once on (cell_n, cell_e) and each polygon's WKB
-    rings cross the wire once per covered cell, never once per
-    candidate point row (a plain equi-join would multiply the ring
-    payload by the points-per-cell factor). Inside each cell group
-    one numpy pass bbox-prefilters and even-odd-refines every
-    (point, polygon) pair.
-
-    Hot cells (skew unit = one cell group = one task) are SUB-SPLIT:
-    any cell holding more than max_cell_points points is salted into
-    m = ceil(n/max_cell_points) subgroups by point-key hash, and that
-    cell's cover rows are replicated once per salt — each (point,
-    polygon) pair still meets exactly once, so the output is
-    unchanged; per-task input is bounded by ~max_cell_points no
-    matter how skewed the point layer is. The factor table is an
-    aggregate-only driver collect (cells above threshold only),
-    broadcast back — point rows never leave the executors."""
-    s = cell_km * 1000
-    cover = polygon_cover_table(polygons, cell_km)
-    pts = points.select(
-        key_col,
-        "e",
-        "n",
-        F.floor(F.col("n") / s).cast("long").alias("cell_n"),
-        F.floor(F.col("e") / s).cast("long").alias("cell_e"),
-    )
-
-    group_cols = ["cell_n", "cell_e"]
-    factors = hot_cell_factors(spark, pts, max_cell_points)
-    if factors is not None:
-        pts = (
-            pts.join(F.broadcast(factors), ["cell_n", "cell_e"], "left")
-            .withColumn(
-                "salt",
-                F.when(F.col("m").isNull(), F.lit(0)).otherwise(
-                    F.pmod(F.xxhash64(F.col(key_col)), F.col("m")).cast("int")
-                ),
-            )
-            .drop("m")
-        )
-        cover = (
-            cover.join(F.broadcast(factors), ["cell_n", "cell_e"], "left")
-            .withColumn(
-                "salt",
-                F.explode(
-                    F.sequence(F.lit(0), F.coalesce(F.col("m"), F.lit(1)) - 1)
-                ),
-            )
-            .drop("m")
-        )
-        group_cols = ["cell_n", "cell_e", "salt"]
-
-    out_schema = T.StructType(
-        [T.StructField(key_col, T.StringType()), T.StructField("poly_id", T.LongType())]
-    )
-
-    def refine(key, pts_pdf, cov_pdf):
-        from fgcspark.geom.wkb import from_wkb
-
-        empty = pd.DataFrame({key_col: pd.Series(dtype="object"),
-                              "poly_id": pd.Series(dtype="int64")})
-        if len(pts_pdf) == 0 or len(cov_pdf) == 0:
-            return empty
-        ex = pts_pdf["e"].to_numpy()
-        ny = pts_pdf["n"].to_numpy()
-        keys = pts_pdf[key_col].to_numpy()
-        out_k, out_p = [], []
-        for row in cov_pdf.itertuples(index=False):
-            inbb = (ex >= row.x0) & (ex <= row.x1) & (ny >= row.y0) & (ny <= row.y1)
-            if not inbb.any():
-                continue
-            sel = np.nonzero(inbb)[0]
-            rings = from_wkb(bytes(row.rings_wkb)).coords
-            ins = np.zeros(sel.size, dtype=bool)
-            for ring in rings:
-                ins ^= _pip_mask(ex[sel], ny[sel], ring)
-            hit = sel[ins]
-            out_k.extend(keys[hit].tolist())
-            out_p.extend([int(row.poly_id)] * len(hit))
-        if not out_k:
-            return empty
-        return pd.DataFrame({key_col: out_k, "poly_id": out_p})
-
-    return (
-        pts.groupBy(*group_cols)
-        .cogroup(cover.groupBy(*group_cols))
-        .applyInPandas(refine, out_schema)
     )

@@ -127,13 +127,14 @@ def streaming_pip(
     glob: str | None = None,
 ):
     """Streaming point-in-polygon: pages stream -> extract/point/
-    project -> stream-static broadcast join against the (cell, poly)
-    cover -> exact refine -> parquet sink (AvailableNow).
+    project -> stream-static join against the executor-built (cell,
+    poly) cover -> exact refine -> parquet sink (AvailableNow).
 
-    The build side is the SAME driver-built broadcast index as the
-    batch pip_join — stream-static joins are stateless per micro-batch
-    so no watermark is needed, and identical inputs give identical
-    rows to the batch path (asserted in tests)."""
+    The plan is the batch pip_join itself: the layer side is static,
+    so Spark picks broadcast or shuffle by its size exactly as in
+    batch, and the stream-static join is stateless per micro-batch (no
+    watermark needed). Identical inputs give identical rows to the
+    batch path (asserted in tests)."""
     from fgcspark.joins.pip import pip_join
 
     pts = pages_stream_to_points(read_pages_stream(spark, input_dir, glob))
@@ -150,55 +151,3 @@ def streaming_pip(
     q.awaitTermination()
     return q
 
-
-def streaming_pip_partitioned(
-    spark: SparkSession,
-    input_dir: str,
-    polygons: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    cell_km: int = 50,
-    glob: str | None = None,
-    max_cell_points: int = 2_000_000,
-):
-    """Streaming point-in-polygon with the DISTRIBUTED build side —
-    the streaming twin of joins.pip.pip_join_partitioned, for polygon
-    layers too large to broadcast.
-
-    Structured Streaming cannot cogroup a stream against a static
-    table (cogroup/applyInPandas is batch-only on the stream side), so
-    the recipe is ``foreachBatch``: every micro-batch arrives as a
-    plain DataFrame and runs the exact batch cogroup join — one
-    shuffle of both sides on the covering cell, hot-cell sub-split
-    included, no driver index, no broadcast. Per-sink idempotence
-    (foreachBatch gives at-least-once on retry) is restored by writing
-    each micro-batch to its own ``batch_id=<n>`` partition directory
-    with mode=overwrite: a replayed batch id overwrites its own
-    partition instead of appending duplicates — the same
-    partition-overwrite contract as the engine's chunk checkpoints
-    (checkpoint.py).
-
-    Identical inputs yield identical (url, poly_id) rows to the batch
-    pip_join_partitioned (asserted in tests/test_streaming.py)."""
-    from fgcspark.joins.pip import pip_join_partitioned
-
-    pts = pages_stream_to_points(read_pages_stream(spark, input_dir, glob))
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        joined = pip_join_partitioned(
-            spark,
-            batch_df.select("url", "e", "n"),
-            polygons,
-            cell_km=cell_km,
-            max_cell_points=max_cell_points,
-        )
-        joined.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    q = (
-        pts.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

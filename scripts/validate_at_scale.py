@@ -333,15 +333,16 @@ def check_knn_partitioned(spark, d: str, k: int = 5) -> dict:
 
 
 def check_fp_partitioned(spark, d: str) -> dict:
-    """Distributed footprint-intersects twin vs the broadcast path
-    (itself certified against the brute-force oracle by check_fp)."""
+    """Footprint-intersects join under the shuffle strategy (probe
+    hinted `merge`) vs the default plan (itself certified against the
+    brute-force oracle by check_fp)."""
     from fgcspark.extract import with_extracted
-    from fgcspark.joins.fpjoin import footprint_join, footprint_join_partitioned
+    from fgcspark.joins.fpjoin import footprint_join
     from fgcspark.pipeline import load_pages
 
     pages = with_extracted(load_pages(spark, d))
     polys = spark.read.parquet(f"{d}/polygons.parquet")
-    eng = footprint_join_partitioned(spark, pages, polys).select(
+    eng = footprint_join(spark, pages.hint("merge"), polys).select(
         F.col("url").alias("probe_id"), F.col("poly_id").alias("url")
     )
     ref = footprint_join(spark, pages, polys).select(

@@ -84,3 +84,13 @@ def test_dbscan_border_ambiguity_is_min(spark):
     assert out["0:0"]["cluster"] == 0
     assert out["2:2"]["cluster"] == (2 << 20) + 2
     assert out["1:1"]["role"] == "border" and out["1:1"]["cluster"] == 0
+
+
+def test_dbscan_min_frac_rounds_half_up(spark):
+    # N = 1500, min_frac = 0.003: the threshold 4.5 rounds to 5 (the
+    # oracle's DuckDB round), not to 4 (Python's half-even round), so
+    # the 4-doc cell is noise and the 5-doc cell is core
+    pts = _pages(spark, {(0, 0): 5, (10, 10): 4, (20, 20): 1491})
+    rows = dbscan_cells(pts, size_km=10, min_pts=None, min_frac=0.003).collect()
+    assert {r["cell"] for r in rows} == {"0:0", "20:20"}
+    assert all(r["role"] == "core" for r in rows)

@@ -8,13 +8,42 @@ import pytest
 from pyspark.sql import functions as F
 
 from fgcspark.joins.knn import knn_join, knn_join_partitioned
-from fgcspark.joins.pip import build_polygon_index, pip_join
+from fgcspark.joins.pip import build_polygon_index, pip_join, polygon_cover
 from fgcspark.pipeline import pages_to_points
 
 
 @pytest.fixture(scope="module")
 def points(spark, pages_dir):
     return pages_to_points(spark, pages_dir).select("url", "e", "n").cache()
+
+
+def _densified(spark, pages_dir, k=10):
+    """The polygon layer with k points inserted along every ring edge
+    (~11x the vertices): an edge-heavy layer built from
+    polygons.parquet."""
+    from fgcspark.geom.wkt import Geom, parse_wkt, to_wkt
+
+    t = np.arange(k + 1) / (k + 1)
+
+    def dense(ring):
+        a, b = ring[:-1], ring[1:]
+        inner = a[:, None, :] + (b - a)[:, None, :] * t[None, :, None]
+        return np.vstack([inner.reshape(-1, 2), ring[-1:]])
+
+    rows = []
+    layer = pd.read_parquet(f"{pages_dir}/polygons.parquet")
+    for pid, wkt in zip(layer["poly_id"], layer["wkt"]):
+        g = parse_wkt(wkt)
+        if g.gtype == "MULTIPOLYGON":
+            coords = [[dense(r) for r in part] for part in g.coords]
+        else:
+            coords = [dense(r) for r in g.coords]
+        rows.append((int(pid), to_wkt(Geom(g.gtype, coords))))
+    return spark.createDataFrame(rows, "poly_id long, wkt string")
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_pip_matches_golden(spark, pages_dir, points):
@@ -36,12 +65,15 @@ def test_pip_matches_golden(spark, pages_dir, points):
 def test_pip_refine_backends_bit_identical(spark, pages_dir, points):
     """The JVM-expression refine and the Arrow/numpy refine evaluate
     the same crossing formula in the same operation order — their
-    outputs must be IDENTICAL row sets (not just close)."""
+    outputs must be IDENTICAL row sets (not just close), on the layer
+    as generated and on an edge-heavy densified one (page subset)."""
     polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
+    subset = points.where(F.xxhash64("url") % 4 == 0)
     key = lambda d: sorted(map(tuple, d[["url", "poly_id"]].itertuples(index=False)))
-    a = pip_join(spark, points, polys, refine="expr").toPandas()
-    b = pip_join(spark, points, polys, refine="pandas").toPandas()
-    assert key(a) == key(b)
+    for pts, layer in ((points, polys), (subset, _densified(spark, pages_dir))):
+        a = pip_join(spark, pts, layer, refine="expr").toPandas()
+        b = pip_join(spark, pts, layer, refine="pandas").toPandas()
+        assert len(a) > 0 and key(a) == key(b)
 
 
 def test_pip_cell_prefilter_is_lossless(spark, pages_dir, points):
@@ -62,6 +94,9 @@ def test_pip_index_cover_contains_bbox(spark, pages_dir):
         for corner in ((x0, y0), (x1, y1)):
             cell = (int(np.floor(corner[1] / s)), int(np.floor(corner[0] / s)), int(pid))
             assert cell in cover
+    # the executor-built cover the joins use is exactly the same cells
+    built = [tuple(r) for r in polygon_cover(polys, 50).select("cell_n", "cell_e", "poly_id").collect()]
+    assert len(built) == len(idx.cover()) and set(built) == cover
 
 
 def test_knn_matches_golden(spark, pages_dir, points):
@@ -133,23 +168,24 @@ def test_embed_neardup_vec_equals_hof(spark):
 
 
 def test_pip_partitioned_matches_broadcast_path(spark, pages_dir, points):
-    from fgcspark.joins.pip import pip_join_partitioned
-
+    """pip_join with its probe hinted `merge` runs the shuffle plan
+    (sort-merge cell join, no cogroup) and returns exactly the default
+    plan's rows and the golden."""
     polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
+    merged = pip_join(spark, points.hint("merge"), polys)
+    plan = _plan(merged)
+    assert "SortMergeJoin" in plan and "FlatMapCoGroupsInPandas" not in plan
     a = pip_join(spark, points, polys).toPandas()
-    b = pip_join_partitioned(spark, points, polys).toPandas()
+    b = merged.toPandas()
+    gold = pd.read_parquet(f"{pages_dir}/pip.parquet")
     key = lambda d: set(map(tuple, d[["url", "poly_id"]].itertuples(index=False)))
-    assert key(a) == key(b) and len(a) == len(b)
+    assert key(a) == key(b) == key(gold) and len(a) == len(b) == len(gold)
 
 
-def test_pip_partitioned_hot_cell_salting(spark, pages_dir, points):
-    """Skewed layer: every point squeezed into ONE 50 km cell (>=20%
-    of points in a single cell by construction — here 100%). With
-    max_cell_points=200 the hot cell must be sub-split so no cogroup
-    task sees more than ~200 points, and the output must stay
-    identical to the unsalted/broadcast answer."""
-    from fgcspark.joins.pip import hot_cell_factors, pip_join_partitioned
-
+def test_pip_hot_cell_shuffle_matches_broadcast(spark, pages_dir, points):
+    """Skewed layer: every point squeezed into ONE 50 km cell. The
+    shuffle plan puts the whole probe on one join key; its output must
+    stay identical to the broadcast answer."""
     polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
     # collapse all points into the cell of the first point: keep keys
     # and per-point identity, lose spatial spread -> maximal skew
@@ -161,36 +197,13 @@ def test_pip_partitioned_hot_cell_salting(spark, pages_dir, points):
         (F.lit(np.floor(e0 / s) * s) + F.pmod(F.xxhash64("url"), F.lit(int(s)))).alias("e"),
         (F.lit(np.floor(n0 / s) * s) + F.pmod(F.xxhash64("url", F.lit(1)), F.lit(int(s)))).alias("n"),
     )
-    n_total = skew.count()
-
-    # the factor table must cover the hot cell with m ~ n/200
-    pts_cells = skew.select(
-        "url", "e", "n",
-        F.floor(F.col("n") / s).cast("long").alias("cell_n"),
-        F.floor(F.col("e") / s).cast("long").alias("cell_e"),
-    )
-    factors = hot_cell_factors(spark, pts_cells, max_cell_points=200)
-    assert factors is not None
-    frows = factors.collect()
-    assert len(frows) == 1 and frows[0]["m"] == int(np.ceil(n_total / 200))
-
-    # per-task input bound: group sizes under the engine's own salt
-    # assignment never exceed ~max_cell_points (hash imbalance margin)
-    m = frows[0]["m"]
-    sizes = (
-        pts_cells.withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(m)).cast("int"))
-        .groupBy("cell_n", "cell_e", "salt")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.max("c").alias("mx"), F.count(F.lit(1)).alias("groups"))
-        .collect()[0]
-    )
-    assert sizes["groups"] == m
-    assert sizes["mx"] <= 2 * 200
-
+    assert skew.select(F.floor(F.col("e") / s), F.floor(F.col("n") / s)).distinct().count() == 1
+    merged = pip_join(spark, skew.hint("merge"), polys)
+    assert "SortMergeJoin" in _plan(merged)
     a = pip_join(spark, skew, polys).toPandas()
-    b = pip_join_partitioned(spark, skew, polys, max_cell_points=200).toPandas()
+    b = merged.toPandas()
     key = lambda d: set(map(tuple, d[["url", "poly_id"]].itertuples(index=False)))
-    assert key(a) == key(b) and len(a) == len(b)
+    assert len(a) > 0 and key(a) == key(b) and len(a) == len(b)
 
 
 # ---------------------------------------------------------------------------
@@ -258,54 +271,47 @@ def test_fp_join_matches_golden(spark, pages_dir):
 
 
 def test_fp_partitioned_matches_golden_and_broadcast(spark, pages_dir):
-    from fgcspark.extract import with_extracted
-    from fgcspark.joins.fpjoin import footprint_join_partitioned
-    from fgcspark.pipeline import load_pages
-
-    pages = with_extracted(load_pages(spark, pages_dir))
-    polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
-    got = (
-        footprint_join_partitioned(spark, pages, polys)
-        .toPandas()
-        .sort_values(["url", "poly_id"])
-        .reset_index(drop=True)
-    )
-    want = (
-        pd.read_parquet(f"{pages_dir}/fpjoin.parquet")
-        .sort_values(["url", "poly_id"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want)
-
-
-def test_fp_partitioned_hot_cell_split_is_exact(spark, pages_dir):
-    # a tiny threshold forces every cell through the salted sub-split;
-    # the pair set must not change
-    from fgcspark.extract import with_extracted
-    from fgcspark.joins.fpjoin import footprint_join_partitioned
-    from fgcspark.pipeline import load_pages
-
-    pages = with_extracted(load_pages(spark, pages_dir)).limit(400)
-    polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
-    key = lambda d: sorted(map(tuple, d[["url", "poly_id"]].itertuples(index=False)))
-    a = footprint_join_partitioned(spark, pages, polys).toPandas()
-    b = footprint_join_partitioned(spark, pages, polys, max_cell_rows=5).toPandas()
-    assert key(a) == key(b)
-
-
-def test_fp_refine_backends_bit_identical(spark, pages_dir):
-    """The nested-lambda expression refine and the WKB/numpy refine
-    evaluate identical float predicates — identical row sets."""
+    """footprint_join with its probe hinted `merge` runs the shuffle
+    plan (sort-merge cell join, no cogroup) and returns exactly the
+    golden and the default plan's rows."""
     from fgcspark.extract import with_extracted
     from fgcspark.joins.fpjoin import footprint_join
     from fgcspark.pipeline import load_pages
 
     pages = with_extracted(load_pages(spark, pages_dir))
     polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
+    merged = footprint_join(spark, pages.hint("merge"), polys)
+    plan = _plan(merged)
+    assert "SortMergeJoin" in plan and "FlatMapCoGroupsInPandas" not in plan
+    got = merged.toPandas().sort_values(["url", "poly_id"]).reset_index(drop=True)
+    want = (
+        pd.read_parquet(f"{pages_dir}/fpjoin.parquet")
+        .sort_values(["url", "poly_id"])
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, want)
+    default = footprint_join(spark, pages, polys).toPandas()
     key = lambda d: sorted(map(tuple, d[["url", "poly_id"]].itertuples(index=False)))
-    a = footprint_join(spark, pages, polys, refine="expr").toPandas()
-    b = footprint_join(spark, pages, polys, refine="pandas").toPandas()
-    assert key(a) == key(b)
+    assert key(default) == key(got)
+
+
+def test_fp_refine_backends_bit_identical(spark, pages_dir):
+    """The nested-lambda expression refine and the WKB/numpy refine
+    evaluate identical float predicates — identical row sets, on the
+    layer as generated and on an edge-heavy densified one (page
+    subset)."""
+    from fgcspark.extract import with_extracted
+    from fgcspark.joins.fpjoin import footprint_join
+    from fgcspark.pipeline import load_pages
+
+    pages = with_extracted(load_pages(spark, pages_dir))
+    polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
+    subset = pages.where(F.xxhash64("url") % 4 == 0)
+    key = lambda d: sorted(map(tuple, d[["url", "poly_id"]].itertuples(index=False)))
+    for pg, layer in ((pages, polys), (subset, _densified(spark, pages_dir))):
+        a = footprint_join(spark, pg, layer, refine="expr").toPandas()
+        b = footprint_join(spark, pg, layer, refine="pandas").toPandas()
+        assert len(a) > 0 and key(a) == key(b)
 
 
 def test_fp_join_prefilter_is_lossless(spark, pages_dir):

@@ -144,21 +144,24 @@ def test_bbox_pipeline_single_udf_stage(spark, pages_dir):
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
 
 
-def test_fp_partitioned_is_cogroup_no_broadcast_layer(spark, pages_dir):
-    """The distributed footprint join must cogroup on the cell with NO
-    broadcast of the layer and no driver-built index (the broadcast
-    path remains available separately). Hot-cell factors may broadcast
-    the tiny aggregate-only factor table, so the assertion targets the
-    cover payload: the plan joins via FlatMapCoGroupsInPandas."""
+def test_spatial_join_layer_built_on_executors(spark, pts, pages_dir):
+    """pip_join and footprint_join build their polygon layer on the
+    executors (one MapInPandas) and broadcast that, not rows collected
+    to the driver (a LocalTableScan build side)."""
     from fgcspark.extract import with_extracted
-    from fgcspark.joins.fpjoin import footprint_join_partitioned
+    from fgcspark.joins.fpjoin import footprint_join
+    from fgcspark.joins.pip import pip_join
     from fgcspark.pipeline import load_pages
 
-    pages = with_extracted(load_pages(spark, pages_dir)).limit(50)
     polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
-    df = footprint_join_partitioned(spark, pages, polys, materialize=False)
-    plan = plan_of(df)
-    assert "FlatMapCoGroupsInPandas" in plan
+    pages = with_extracted(load_pages(spark, pages_dir))
+    for df in (
+        pip_join(spark, pts.select("url", "e", "n"), polys),
+        footprint_join(spark, pages, polys),
+    ):
+        plan = plan_of(df)
+        assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
+        assert "BroadcastHashJoin" in plan and "LocalTableScan" not in plan
 
 
 def test_ring_counts_single_source_scan(spark, pages_dir):

@@ -123,26 +123,7 @@ def test_streaming_pip_matches_batch(spark, pages_dir, staged, tmp_path):
     key = lambda df: {(r["url"], r["poly_id"]) for r in df.collect()}
     assert key(got) == key(want)
     assert got.count() == want.count()
-
-
-def test_streaming_pip_partitioned_matches_batch(spark, pages_dir, staged, tmp_path):
-    """The foreachBatch + cogroup recipe equals batch pip_join_partitioned,
-    and a second drain over the same checkpoint emits nothing new."""
-    from fgcspark.joins.pip import pip_join_partitioned
-    from fgcspark.pipeline import pages_to_points
-    from fgcspark.streaming.ingest import streaming_pip_partitioned
-
-    polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
-    out = str(tmp_path / "pipp_out")
-    ck = str(tmp_path / "pipp_ck")
-    streaming_pip_partitioned(spark, str(staged), polys, out, ck)
-    got = spark.read.parquet(out)
-    want = pip_join_partitioned(
-        spark, pages_to_points(spark, pages_dir).select("url", "e", "n"), polys
-    )
-    key = lambda df: {(r["url"], r["poly_id"]) for r in df.collect()}
-    assert key(got) == key(want)
-    assert got.count() == want.count()
     # idempotent re-drain: same checkpoint, no new files -> no new rows
-    streaming_pip_partitioned(spark, str(staged), polys, out, ck)
+    streaming_pip(spark, str(staged), polys, out, ck)
     assert spark.read.parquet(out).count() == want.count()
+
