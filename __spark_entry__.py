@@ -663,6 +663,22 @@ def _q_iceberg_merge(spark, sf_dir):
     return t.read(spark)
 
 
+def _fresh_stream_dirs(name: str) -> tuple[str, str, str]:
+    """(input, output, checkpoint) paths under a new temp dir, so every
+    invocation of a streamed query stages its input and drains it
+    afresh instead of replaying an earlier run's checkpoint and output.
+    The dir outlives the returned DataFrame's reads and is removed when
+    the driver process exits."""
+    import atexit
+    import shutil
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix=f"fgc_{name}_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    Path(root, "in").mkdir()
+    return f"{root}/in", f"{root}/out", f"{root}/ck"
+
+
 def _q_streamed_points(spark, sf_dir):
     """Structured Streaming ingest (file source, AvailableNow): drains
     the pages dir as micro-batches through the same extract/geometry
@@ -671,7 +687,7 @@ def _q_streamed_points(spark, sf_dir):
     from fgcspark.streaming.ingest import ingest_points
 
     d = _geo_dir(sf_dir)
-    out, ck = f"{d}/_stream_out", f"{d}/_stream_ck"
+    _, out, ck = _fresh_stream_dirs("stream")
     ingest_points(spark, d, out, ck, glob="pages.parquet")
     return spark.read.parquet(out).select("url", "cell_10km")
 
@@ -682,32 +698,25 @@ def _q_streamed_sessions(spark, sf_dir):
     a far-future close-the-books heartbeat whose own session is
     dropped. Oracle re-derives the strict-boundary (diff >= gap)
     session semantics with window SQL."""
-    import pathlib
     import shutil
 
     import pandas as pd
 
     from fgcspark.streaming.sessions import streaming_session_stats
 
-    d = _geo_dir(sf_dir)
-    stage, out, ck = f"{d}/_sess_in", f"{d}/_sess_out", f"{d}/_sess_ck"
-    pathlib.Path(stage).mkdir(parents=True, exist_ok=True)
-    dst = pathlib.Path(stage) / "events.parquet"
-    if not dst.exists():
-        shutil.copy(f"{sf_dir}/events.parquet", dst)
-    hb_path = pathlib.Path(stage) / "zz-heartbeat.parquet"
-    if not hb_path.exists():
-        hb = pd.DataFrame(
-            {
-                "event_id": pd.array([10**12], dtype="int64"),
-                "ts": pd.array([pd.Timestamp("2100-01-01")]).astype("datetime64[us]"),
-                "user_id": pd.array([-1], dtype="int64"),
-                "event_type": ["heartbeat"],
-                "value": [0.0],
-                "props": [""],
-            }
-        )
-        hb.to_parquet(hb_path, index=False)
+    stage, out, ck = _fresh_stream_dirs("sess")
+    shutil.copy(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
+    hb = pd.DataFrame(
+        {
+            "event_id": pd.array([10**12], dtype="int64"),
+            "ts": pd.array([pd.Timestamp("2100-01-01")]).astype("datetime64[us]"),
+            "user_id": pd.array([-1], dtype="int64"),
+            "event_type": ["heartbeat"],
+            "value": [0.0],
+            "props": [""],
+        }
+    )
+    hb.to_parquet(f"{stage}/zz-heartbeat.parquet", index=False)
     streaming_session_stats(spark, stage, out, ck, gap="30 minutes")
     return spark.read.parquet(out).where(F.col("user_id") >= 0)
 
@@ -720,7 +729,6 @@ def _q_streamed_dedup(spark, sf_dir):
     rows, so the drained output is exactly one fingerprint per
     distinct original text. Oracle = DISTINCT fingerprints of the
     original corpus (duplicates add none)."""
-    import pathlib
     import shutil
 
     import pyarrow as pa
@@ -730,32 +738,29 @@ def _q_streamed_dedup(spark, sf_dir):
     from fgcspark.streaming.dedup import streaming_exact_dedup
 
     d = _geo_dir(sf_dir)
-    stage, out, ck = f"{d}/_dedup_in", f"{d}/_dedup_out", f"{d}/_dedup_ck"
-    pathlib.Path(stage).mkdir(parents=True, exist_ok=True)
-    dst = pathlib.Path(stage) / "aa-pages.parquet"
-    if not dst.exists():
-        shutil.copy(f"{d}/pages.parquet", dst)
-    re_path = pathlib.Path(stage) / "zz-recrawl.parquet"
-    if not re_path.exists():
-        t = pq.read_table(f"{d}/pages.parquet")
-        sel = t.take(list(range(0, t.num_rows, 20)))
-        urls2 = pa.array(
-            [
-                "https://recrawl.example/" + u.rsplit("/", 1)[-1]
-                for u in sel["url"].to_pylist()
-            ],
-            sel.schema.field("url").type,
-        )
-        ts2 = pc.add(
-            sel["warc_ts"], pa.scalar(3_600_000_000, pa.duration("us"))
-        ).cast(sel.schema.field("warc_ts").type)
-        arrays = [
-            urls2 if name == "url" else ts2 if name == "warc_ts" else sel[name]
-            for name in sel.schema.names
-        ]
-        # keep the EXACT original schema so the stream's fixed reader
-        # schema matches byte-for-byte
-        pq.write_table(pa.Table.from_arrays(arrays, schema=sel.schema), re_path)
+    stage, out, ck = _fresh_stream_dirs("dedup")
+    shutil.copy(f"{d}/pages.parquet", f"{stage}/aa-pages.parquet")
+    t = pq.read_table(f"{d}/pages.parquet")
+    sel = t.take(list(range(0, t.num_rows, 20)))
+    urls2 = pa.array(
+        [
+            "https://recrawl.example/" + u.rsplit("/", 1)[-1]
+            for u in sel["url"].to_pylist()
+        ],
+        sel.schema.field("url").type,
+    )
+    ts2 = pc.add(
+        sel["warc_ts"], pa.scalar(3_600_000_000, pa.duration("us"))
+    ).cast(sel.schema.field("warc_ts").type)
+    arrays = [
+        urls2 if name == "url" else ts2 if name == "warc_ts" else sel[name]
+        for name in sel.schema.names
+    ]
+    # keep the EXACT original schema so the stream's fixed reader
+    # schema matches byte-for-byte
+    pq.write_table(
+        pa.Table.from_arrays(arrays, schema=sel.schema), f"{stage}/zz-recrawl.parquet"
+    )
     streaming_exact_dedup(spark, stage, out, ck, horizon="30 days")
     return spark.read.parquet(out).select("fp")
 
@@ -768,40 +773,34 @@ def _q_streamed_decontaminate(spark, sf_dir):
     A far-future heartbeat (sentinel shingle, id dropped from the
     output) seals every real window — see the module docstring for why
     the heartbeat must itself produce a shingle."""
-    import pathlib
-
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from fgcspark.streaming.decontaminate import streaming_decontaminate
 
-    d = _geo_dir(sf_dir)
-    stage, out, ck = f"{d}/_decon_in", f"{d}/_decon_out", f"{d}/_decon_ck"
-    pathlib.Path(stage).mkdir(parents=True, exist_ok=True)
-    dst = pathlib.Path(stage) / "aa-docs.parquet"
-    if not dst.exists():
-        t = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-        df = t.to_pandas()
-        df = df[df["doc_id"] % 97 != 0]
-        df["ts"] = (
-            pd.Timestamp("2021-06-08")
-            + pd.to_timedelta(df["doc_id"] * 37, unit="s")
-        ).astype("datetime64[us]")
-        pq.write_table(
-            pa.Table.from_pandas(df[["doc_id", "ts", "text"]], preserve_index=False),
-            dst,
-        )
-    hb_path = pathlib.Path(stage) / "zz-heartbeat.parquet"
-    if not hb_path.exists():
-        hb = pd.DataFrame(
-            {
-                "doc_id": pd.array([10**12], dtype="int64"),
-                "ts": pd.array([pd.Timestamp("2100-01-01")]).astype("datetime64[us]"),
-                "text": ["\x01hb \x01hb \x01hb"],
-            }
-        )
-        pq.write_table(pa.Table.from_pandas(hb, preserve_index=False), hb_path)
+    stage, out, ck = _fresh_stream_dirs("decon")
+    t = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
+    df = t.to_pandas()
+    df = df[df["doc_id"] % 97 != 0]
+    df["ts"] = (
+        pd.Timestamp("2021-06-08")
+        + pd.to_timedelta(df["doc_id"] * 37, unit="s")
+    ).astype("datetime64[us]")
+    pq.write_table(
+        pa.Table.from_pandas(df[["doc_id", "ts", "text"]], preserve_index=False),
+        f"{stage}/aa-docs.parquet",
+    )
+    hb = pd.DataFrame(
+        {
+            "doc_id": pd.array([10**12], dtype="int64"),
+            "ts": pd.array([pd.Timestamp("2100-01-01")]).astype("datetime64[us]"),
+            "text": ["\x01hb \x01hb \x01hb"],
+        }
+    )
+    pq.write_table(
+        pa.Table.from_pandas(hb, preserve_index=False), f"{stage}/zz-heartbeat.parquet"
+    )
     eval_docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 97 == 0)
     streaming_decontaminate(spark, stage, eval_docs, out, ck, n=3)
     return (

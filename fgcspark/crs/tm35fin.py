@@ -11,8 +11,14 @@ reference's GC kernel rounds to integer meters in this frame
 Ellipsoid GRS80; projection params from the public EPSG registry entry
 for 3067: lon0=27 deg, k0=0.9996, FE=500000, FN=0.
 
-All functions are vectorized over numpy arrays — these run inside Arrow
-batches in pandas UDFs, never per-row Python.
+All functions are vectorized over numpy arrays and elementwise, so a
+coordinate's result does not depend on what else is in the call. The
+point UDFs (pipeline.point_en, knn.probe_en) and the footprint kernels
+(pipeline._footprint_batch's G10 output transform, fpjoin's probe
+projection, layer_analytics) call them once per Arrow batch. Some
+call sites still call them once per geometry inside a batch: the G5
+GEOMETRYCOLLECTION round trip and the G11 point buffer in pipeline.py,
+and the polygon layer build in joins/pip.py (one call per ring).
 """
 
 from __future__ import annotations

@@ -1,7 +1,10 @@
 """Geometry kernels G1-G13 (SURVEY.md §2.6), numpy over the Geom model.
 
-Each kernel cites the reference behavior it re-expresses. These run
-inside Arrow-batched pandas UDFs; none is called per row from Spark.
+Each kernel cites the reference behavior it re-expresses. They run
+inside Arrow-batched pandas UDFs and mapInPandas stages, never as
+row-at-a-time Spark UDFs. Inside a batch, most kernels take one
+geometry per call; transform_batch projects the whole batch's
+coordinates in one call.
 """
 
 from __future__ import annotations
@@ -53,6 +56,73 @@ def transform_coords(g: Geom, fn) -> Geom:
         return [_walk("_inner", r) if isinstance(r, np.ndarray) else [_arr(q) for q in r] for r in c]
 
     return Geom(g.gtype, _walk(g.gtype, g.coords))
+
+
+def transform_batch(geoms: list[Geom | None], fn) -> list[Geom | None]:
+    """Project every coordinate of `geoms` with ONE call to
+    fn(xs, ys) -> (xs, ys): collect each geometry's coordinate arrays
+    into a single concatenated (N, 2) buffer, transform it, and slice
+    the result back into identically-shaped geometries. None entries
+    pass through as None.
+
+    Elementwise-equivalent to transform_coords per geometry (the
+    transforms are elementwise numpy, so results are bit-identical
+    regardless of batch composition; tests/test_kernels.py pins it);
+    GEOMETRYCOLLECTION members recurse through the same buffer. One
+    call per Arrow batch amortizes numpy dispatch and series set-up
+    that a per-geometry call pays per feature."""
+    chunks: list[np.ndarray] = []
+    pos = 0
+
+    def grab(a: np.ndarray):
+        nonlocal pos
+        flat = np.asarray(a, dtype=float).reshape(-1, 2)
+        chunks.append(flat)
+        tpl = (pos, flat.shape[0], a.shape)
+        pos += flat.shape[0]
+        return tpl
+
+    def collect(t, c):
+        if c is None:
+            return None
+        if t == GEOMETRYCOLLECTION:
+            return [(m.gtype, collect(m.gtype, m.coords)) for m in c]
+        if isinstance(c, np.ndarray):
+            return grab(c)
+        out = []
+        for r in c:
+            if isinstance(r, np.ndarray):
+                out.append(grab(r))
+            else:
+                out.append([grab(q) for q in r])
+        return out
+
+    templates = [None if g is None else (g.gtype, collect(g.gtype, g.coords)) for g in geoms]
+    if pos:
+        buf = np.concatenate(chunks, axis=0)
+        xs, ys = fn(buf[:, 0], buf[:, 1])
+        out = np.stack(
+            [np.asarray(xs, dtype=float), np.asarray(ys, dtype=float)], axis=1
+        )
+    else:
+        out = np.empty((0, 2))
+
+    def rebuild(t, tpl):
+        if tpl is None:
+            return None
+        if t == GEOMETRYCOLLECTION:
+            return [Geom(mt, rebuild(mt, mc)) for mt, mc in tpl]
+        if isinstance(tpl, tuple):
+            s, n, shape = tpl
+            return out[s : s + n].reshape(shape).copy()
+        return [
+            rebuild("_leaf", e)
+            if isinstance(e, tuple)
+            else [rebuild("_leaf", q) for q in e]
+            for e in tpl
+        ]
+
+    return [None if tpl is None else Geom(tpl[0], rebuild(*tpl)) for tpl in templates]
 
 
 def _rings_of(g: Geom) -> list[np.ndarray]:

@@ -12,83 +12,17 @@ Spark stage driver.
 Scale shape: one mapInPandas pass, no shuffle. Per Arrow batch the
 WKT column is parsed once into geometry objects and ALL coordinates in
 the batch are pushed through the Karney transverse-Mercator transform
-in ONE vectorized numpy call (`transform_batch` below), instead of one
-transform invocation per feature — the per-call numpy dispatch and
-series setup amortize across the whole batch, and the per-feature
-Python work shrinks to the O(vertices) kernel itself.
+in ONE vectorized numpy call (`kernels.transform_batch`), instead of
+one transform invocation per feature; the per-feature Python work is
+the parse and the O(vertices) kernel itself.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 
-from fgcspark.geom.wkt import GEOMETRYCOLLECTION, Geom, parse_wkt, to_wkt
-
-
-def transform_batch(geoms: list[Geom], fn) -> list[Geom]:
-    """Project every coordinate of `geoms` with ONE call to
-    fn(xs, ys) -> (xs, ys): collect each geometry's coordinate arrays
-    into a single concatenated (N, 2) buffer, transform it, and slice
-    the result back into identically-shaped geometries.
-
-    Elementwise-equivalent to kernels.transform_coords per geometry
-    (the transform itself is elementwise numpy, so results are
-    bit-identical regardless of batch composition); GEOMETRYCOLLECTION
-    members recurse through the same buffer.
-    """
-    chunks: list[np.ndarray] = []
-    pos = 0
-
-    def grab(a: np.ndarray):
-        nonlocal pos
-        flat = np.asarray(a, dtype=float).reshape(-1, 2)
-        chunks.append(flat)
-        tpl = (pos, flat.shape[0], a.shape)
-        pos += flat.shape[0]
-        return tpl
-
-    def collect(t, c):
-        if c is None:
-            return None
-        if t == GEOMETRYCOLLECTION:
-            return [(m.gtype, collect(m.gtype, m.coords)) for m in c]
-        if isinstance(c, np.ndarray):
-            return grab(c)
-        out = []
-        for r in c:
-            if isinstance(r, np.ndarray):
-                out.append(grab(r))
-            else:
-                out.append([grab(q) for q in r])
-        return out
-
-    templates = [(g.gtype, collect(g.gtype, g.coords)) for g in geoms]
-    if pos:
-        buf = np.concatenate(chunks, axis=0)
-        xs, ys = fn(buf[:, 0], buf[:, 1])
-        out = np.stack(
-            [np.asarray(xs, dtype=float), np.asarray(ys, dtype=float)], axis=1
-        )
-    else:
-        out = np.empty((0, 2))
-
-    def rebuild(t, tpl):
-        if tpl is None:
-            return None
-        if t == GEOMETRYCOLLECTION:
-            return [Geom(mt, rebuild(mt, mc)) for mt, mc in tpl]
-        if isinstance(tpl, tuple):
-            s, n, shape = tpl
-            return out[s : s + n].reshape(shape).copy()
-        return [
-            rebuild("_leaf", e)
-            if isinstance(e, tuple)
-            else [rebuild("_leaf", q) for q in e]
-            for e in tpl
-        ]
-
-    return [Geom(t, rebuild(t, tpl)) for t, tpl in templates]
+from fgcspark.geom.kernels import transform_batch
+from fgcspark.geom.wkt import parse_wkt, to_wkt
 
 
 def _stage(polys: DataFrame, id_col: str, wkt_col: str, per_geom, schema: str):

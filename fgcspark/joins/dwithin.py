@@ -82,20 +82,20 @@ def dwithin_join_partitioned(
     distributed twin of dwithin_join (same output, cf. the kNN pair).
 
     Probes stay a DataFrame: projected to the plane by the same numpy
-    kernel as the page side (knn._probe_en), fanned out to candidate
+    kernel as the page side (knn.probe_en), fanned out to candidate
     cells by a crossJoin with the broadcast OFFSET table above
     (O((R/s)^2) rows, probe-count-independent), then a shuffle
     equi-join on the cell id against the page projection and the same
     exact squared-distance filter. Nothing is collected; both sides
     shuffle once on the cell key, and skewed cells split naturally
     because each probe-cell pair is its own join row."""
-    from fgcspark.joins.knn import _probe_en
+    from fgcspark.joins.knn import probe_en
 
     s = float(cell_km * 1000)
     offs = spark.createDataFrame(
         _cover_offsets(float(radius_m), s), schema="dn long, de long"
     )
-    pr = probes.select("probe_id", _probe_en("lon", "lat").alias("_p")).select(
+    pr = probes.select("probe_id", probe_en("lon", "lat").alias("_p")).select(
         "probe_id",
         F.col("_p.e").alias("pe"),
         F.col("_p.n").alias("pn"),

@@ -26,9 +26,11 @@ golden and scripts/validate_at_scale.py):
 Physical plan: joins/pip.py's one spatial-join plan, with a footprint
 probe:
 1. one Arrow-batched pandas UDF parses + projects each footprint ONCE
-   and emits its geometry (nested part arrays for the default
-   expression refine; WKB for the numpy refine) + bbox, so downstream
-   stages never re-parse;
+   (one TM35FIN transform call per Arrow batch; the UDF is marked
+   nondeterministic so Catalyst cannot evaluate it a second time below
+   the join's null filters) and emits its geometry (nested part arrays
+   for the default expression refine; WKB for the numpy refine) + bbox,
+   so downstream stages never re-parse;
 2. the probe's bbox cell cover is exploded JVM-side with
    sequence()/explode (footprints are small, the cover is a handful of
    cells at the prefilter grid);
@@ -58,8 +60,9 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from fgcspark.crs import tm35fin as tm
+from fgcspark.geom.kernels import transform_batch
 from fgcspark.geom.wkb import from_wkb, to_wkb
-from fgcspark.geom.wkt import _KNOWN, Geom, parse_wkt
+from fgcspark.geom.wkt import _KNOWN, GEOMETRYCOLLECTION, POLYGON, Geom, parse_wkt
 from fgcspark.joins.pip import (
     EDGE,
     VERT,
@@ -72,26 +75,13 @@ from fgcspark.joins.pip import (
 )
 
 
-def _project_geom(g: Geom) -> Geom:
-    """Structure-preserving lon/lat -> EPSG:3067 transform."""
-
-    def go(c):
-        if c is None:
-            return None
-        if isinstance(c, Geom):
-            # unknown tags (TRIANGLE) carry POLYGON-shaped nesting and
-            # join like polygons; normalize so WKB can serialize them
-            t = c.gtype if c.gtype in _KNOWN else "POLYGON"
-            return Geom(t, go(c.coords))
-        if isinstance(c, np.ndarray):
-            if c.ndim == 1:
-                e, n = tm.geodetic_to_tm35(c[0:1], c[1:2])
-                return np.array([e[0], n[0]])
-            e, n = tm.geodetic_to_tm35(c[:, 0], c[:, 1])
-            return np.stack([e, n], axis=1)
-        return [go(x) for x in c]
-
-    return Geom(g.gtype if g.gtype in _KNOWN else "POLYGON", go(g.coords))
+def _known_tags(g: Geom) -> Geom:
+    """Unknown tags (TRIANGLE) carry POLYGON-shaped nesting and join
+    like polygons; rename them POLYGON, collection members included, so
+    WKB can serialize them. Coordinates are shared, not copied."""
+    if g.gtype == GEOMETRYCOLLECTION:
+        return Geom(g.gtype, [_known_tags(m) for m in g.coords])
+    return g if g.gtype in _KNOWN else Geom(POLYGON, g.coords)
 
 
 def _flatten_parts(g: Geom, out: list) -> None:
@@ -258,9 +248,12 @@ def _join_geoms(fp: pd.Series, lon: pd.Series, lat: pd.Series):
     """(row index, projected geometry, its parts, bbox) for every row
     with a join geometry. G4 substitution: a NULL/POINT/EMPTY footprint
     with coordinates joins as the point; rows with neither a parseable
-    footprint nor coordinates are skipped."""
+    footprint nor coordinates are skipped. The batch's geometries are
+    projected to EPSG:3067 with one transform_batch call."""
     lon_v = lon.to_numpy(dtype=float, na_value=np.nan)
     lat_v = lat.to_numpy(dtype=float, na_value=np.nan)
+    rows: list[int] = []
+    geoms: list[Geom] = []
     for i in range(len(fp)):
         w = fp.iloc[i]
         substitute = w is None or w.startswith("POINT") or "EMPTY" in w
@@ -273,7 +266,10 @@ def _join_geoms(fp: pd.Series, lon: pd.Series, lat: pd.Series):
                 g = parse_wkt(w)
             except Exception:
                 continue
-        p = _project_geom(g)
+        rows.append(i)
+        geoms.append(g)
+    for i, p in zip(rows, transform_batch(geoms, tm.geodetic_to_tm35)):
+        p = _known_tags(p)
         parts: list = []
         _flatten_parts(p, parts)
         if parts:
@@ -306,6 +302,13 @@ def _fp_project_wkb(fp: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.DataFra
     return pd.DataFrame(
         {"wkb": wkbs, "x0": bb[:, 0], "y0": bb[:, 1], "x1": bb[:, 2], "y1": bb[:, 3]}
     )
+
+
+# Nondeterministic for the reason given at pipeline.point_en: otherwise
+# the probe's null filters are pushed below the projection and every
+# row is parsed and projected twice, by two Python runners.
+fp_project_parts = _fp_project_parts.asNondeterministic()
+fp_project_wkb = _fp_project_wkb.asNondeterministic()
 
 
 def _x_cross(ox, oy, px, py, qx, qy):
@@ -373,8 +376,9 @@ def footprint_join(
 
     refine="expr" (default) runs the exact intersects predicate as
     nested JVM higher-order lambdas over the footprint's part arrays
-    and the cover's edge/vertex arrays — after the single
-    parse/project UDF, no Python touches the hot path. refine="pandas"
+    and the cover's edge/vertex arrays — after the parse/project UDF,
+    which runs once per row, no Python touches the hot path (the plan
+    has one ArrowEvalPython node). refine="pandas"
     parses the footprint to WKB instead and runs the numpy predicate
     against a driver-broadcast ring table. Both evaluate identical
     float predicates in identical operation order — bit-identical
@@ -387,7 +391,7 @@ def footprint_join(
     if refine not in ("expr", "pandas"):
         raise ValueError(f"unknown refine backend {refine!r}")
     project, geom = (
-        (_fp_project_parts, "parts") if refine == "expr" else (_fp_project_wkb, "wkb")
+        (fp_project_parts, "parts") if refine == "expr" else (fp_project_wkb, "wkb")
     )
     s = cell_km * 1000
     probe = (

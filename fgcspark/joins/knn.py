@@ -51,6 +51,12 @@ def _probe_en(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
     e, n = tm.geodetic_to_tm35(lon.to_numpy(), lat.to_numpy())
     return pd.DataFrame({"e": e, "n": n})
 
+
+# Nondeterministic for the reason given at pipeline.point_en: otherwise
+# the join's null filters on e/n are pushed below the projection and
+# the probe UDF runs twice per row.
+probe_en = _probe_en.asNondeterministic()
+
 DEFAULT_CELL_KM = 50
 # the probe set is driver-resident by contract (collected + broadcast
 # per ring batch); cap it explicitly so a misuse fails loudly instead
@@ -119,7 +125,7 @@ def knn_join_partitioned(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     active = (
-        probes.select("probe_id", _probe_en("lon", "lat").alias("_p"))
+        probes.select("probe_id", probe_en("lon", "lat").alias("_p"))
         .select(
             "probe_id",
             F.col("_p.e").alias("pe"),

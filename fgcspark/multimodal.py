@@ -128,15 +128,18 @@ def with_header_fields(df: DataFrame, col: str = "media") -> DataFrame:
             "_seg",
             F.coalesce((~F.col("_done")) & (mk0 == 0xFF) & mk1.isNotNull(), F.lit(False)),
         ).withColumn("_sof", F.col("_seg") & mk1.isin(*_SOF_MARKERS))
+        # all-or-nothing, as in _parse_header: a SOF whose 10-byte
+        # prefix crosses the window end sets no field
+        fits = F.col("_sof") & _byte(hxc, off + F.lit(9)).isNotNull()
         df = (
             df.withColumn(
-                "_jh", F.when(F.col("_sof"), _be(hxc, off + F.lit(5), 2)).otherwise(F.col("_jh"))
+                "_jh", F.when(fits, _be(hxc, off + F.lit(5), 2)).otherwise(F.col("_jh"))
             )
             .withColumn(
-                "_jw", F.when(F.col("_sof"), _be(hxc, off + F.lit(7), 2)).otherwise(F.col("_jw"))
+                "_jw", F.when(fits, _be(hxc, off + F.lit(7), 2)).otherwise(F.col("_jw"))
             )
             .withColumn(
-                "_jc", F.when(F.col("_sof"), _byte(hxc, off + F.lit(9))).otherwise(F.col("_jc"))
+                "_jc", F.when(fits, _byte(hxc, off + F.lit(9))).otherwise(F.col("_jc"))
             )
             .withColumn(
                 "_off",
@@ -238,11 +241,12 @@ def media_header_sql(blob_col: str = "media") -> str:
     for i in range(MAX_JPEG_SEGMENTS):
         seg = f"coalesce((NOT done) AND {b('off')} = 255 AND {b('off+1')} IS NOT NULL, false)"
         sof = f"({seg} AND {b('off+1')} IN (192, 193, 194))"
+        fits = f"({sof} AND {b('off+9')} IS NOT NULL)"  # all-or-nothing
         steps.append(
             f"j{i + 1} AS (SELECT * REPLACE ("
-            f"CASE WHEN {sof} THEN CAST({be('off+7', 2)} AS INT) ELSE jw END AS jw, "
-            f"CASE WHEN {sof} THEN CAST({be('off+5', 2)} AS INT) ELSE jh END AS jh, "
-            f"CASE WHEN {sof} THEN CAST({b('off+9')} AS INT) ELSE jc END AS jc, "
+            f"CASE WHEN {fits} THEN CAST({be('off+7', 2)} AS INT) ELSE jw END AS jw, "
+            f"CASE WHEN {fits} THEN CAST({be('off+5', 2)} AS INT) ELSE jh END AS jh, "
+            f"CASE WHEN {fits} THEN CAST({b('off+9')} AS INT) ELSE jc END AS jc, "
             f"(done OR {sof} OR NOT {seg}) AS done, "
             f"CASE WHEN {seg} AND NOT {sof} THEN off + 2 + {be('off+2', 2)}"
             f" ELSE off END AS off"

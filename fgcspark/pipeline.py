@@ -148,7 +148,8 @@ def _footprint_batch(
     G1 (NA -> POLYGON EMPTY), G4 (MULTIPOINT substitution; the >1-row
     guard is applied table-wide by the caller via `substitute`),
     G5 (GC homogenization in EPSG:3067, geo=footprint only),
-    G8 (cast to MULTI), G10 (crs=euref output transform)."""
+    G8 (cast to MULTI), G10 (crs=euref output transform, one
+    transform_batch call over the whole batch)."""
     lon_v = lon.to_numpy()
     lat_v = lat.to_numpy()
     out = []
@@ -167,11 +168,10 @@ def _footprint_batch(
             g = K.uncollect(g, digits=0)
             g = K.transform_coords(g, tm35_inverse)
         # G8: output is always MULTI*
-        g = K.cast_to_multi(g)
-        if crs == "euref":
-            g = K.transform_coords(g, tm.geodetic_to_tm35)
-        out.append(to_wkt(g))
-    return pd.Series(out)
+        out.append(K.cast_to_multi(g))
+    if crs == "euref":
+        out = K.transform_batch(out, tm.geodetic_to_tm35)
+    return pd.Series([to_wkt(g) for g in out])
 
 
 def tm35_inverse(x, y):

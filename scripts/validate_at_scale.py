@@ -148,7 +148,7 @@ def check_fp(spark, d: str) -> dict:
     — no cell cover, no reporting-cell logic, independent decision
     code from the engine's orientation-straddle kernel."""
     from fgcspark.extract import with_extracted
-    from fgcspark.joins.fpjoin import _flatten_parts, _project_geom, footprint_join
+    from fgcspark.joins.fpjoin import _flatten_parts, footprint_join
     from fgcspark.joins.pip import build_polygon_index
     from fgcspark.pipeline import load_pages
 
@@ -170,6 +170,8 @@ def check_fp(spark, d: str) -> dict:
     bc = spark.sparkContext.broadcast(payload)
 
     def oracle(batches):
+        from fgcspark.crs.tm35fin import geodetic_to_tm35
+        from fgcspark.geom.kernels import transform_coords
         from fgcspark.geom.wkt import parse_wkt
         from fgcspark.synth.pages import _fp_intersects
 
@@ -187,7 +189,8 @@ def check_fp(spark, d: str) -> dict:
                 else:
                     g = parse_wkt(w)
                 parts: list = []
-                _flatten_parts(_project_geom(g), parts)
+                # per-geometry projection: the engine's probe batches it
+                _flatten_parts(transform_coords(g, geodetic_to_tm35), parts)
                 if not parts:
                     continue
                 # normalize poly parts: generator's twin wants the ring

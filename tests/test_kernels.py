@@ -294,3 +294,125 @@ def test_buffer_line_outline_matches_distance_field(pts):
     far = d >= r + 1e-9
     assert inside[near].all(), "point within the inscribed radius left outside"
     assert (~inside[far]).all(), "point beyond the buffer radius claimed inside"
+
+
+# ---------------------------------------------------------------------------
+# transform_batch: one projection call per Arrow batch, bit-identical to
+# the per-geometry transform_coords reference
+# ---------------------------------------------------------------------------
+
+BATCH_WKTS = [
+    "POINT (24.94 60.17)",
+    "MULTIPOINT ((24 60), (25 61))",
+    "LINESTRING (24 60, 25 61, 26 60.5)",
+    "MULTILINESTRING ((24 60, 25 61), (26 60, 27 61))",
+    "POLYGON ((24 60, 25 60, 25 61, 24 61, 24 60), (24.4 60.4, 24.6 60.4, 24.6 60.6, 24.4 60.6, 24.4 60.4))",
+    "MULTIPOLYGON (((24 60, 25 60, 25 61, 24 60)), ((26 60, 27 60, 27 61, 26 60)))",
+    "GEOMETRYCOLLECTION (POINT (24 60), LINESTRING (24 60, 25 61))",
+    "GEOMETRYCOLLECTION (POINT EMPTY, GEOMETRYCOLLECTION (MULTIPOINT ((26 62)), "
+    "POLYGON ((24 60, 25 60, 25 61, 24 60))), TRIANGLE ((24 60, 25 60, 24.5 61, 24 60)))",
+    "TRIANGLE ((24.1 60.2, 25.3 60.1, 24.7 61.9, 24.1 60.2))",
+    "POLYGON EMPTY",
+    "POINT EMPTY",
+    "LINESTRING EMPTY",
+    "GEOMETRYCOLLECTION EMPTY",
+]
+
+
+def _per_geometry(geoms, fn):
+    """The reference: one transform_coords call per geometry."""
+    return [None if g is None else K.transform_coords(g, fn) for g in geoms]
+
+
+def _assert_identical(a, b):
+    """Same tags, same nesting, same array shapes, equal floats."""
+    if isinstance(a, Geom) or isinstance(b, Geom):
+        assert isinstance(a, Geom) and isinstance(b, Geom)
+        assert a.gtype == b.gtype
+        _assert_identical(a.coords, b.coords)
+    elif isinstance(a, np.ndarray) or isinstance(b, np.ndarray):
+        assert a.shape == b.shape and np.array_equal(a, b)
+    elif a is None or b is None:
+        assert a is None and b is None
+    else:
+        assert len(a) == len(b)
+        for x, y in zip(a, b):
+            _assert_identical(x, y)
+
+
+def test_transform_batch_bit_identical_to_per_geom():
+    from fgcspark.crs import tm35fin as tm
+
+    geoms = [parse_wkt(w) for w in BATCH_WKTS]
+    geoms = [None] + geoms[:5] + [None, None] + geoms[5:]
+    batched = K.transform_batch(geoms, tm.geodetic_to_tm35)
+    assert len(batched) == len(geoms)
+    for b, s in zip(batched, _per_geometry(geoms, tm.geodetic_to_tm35)):
+        _assert_identical(b, s)
+        if s is not None:
+            assert to_wkt(b) == to_wkt(s)
+
+
+def test_transform_batch_empty_and_single():
+    from fgcspark.crs import tm35fin as tm
+
+    assert K.transform_batch([], tm.geodetic_to_tm35) == []
+    assert K.transform_batch([None], tm.geodetic_to_tm35) == [None]
+    empty = K.transform_batch([parse_wkt("POLYGON EMPTY")], tm.geodetic_to_tm35)[0]
+    assert to_wkt(empty) == "POLYGON EMPTY"
+    g = K.transform_batch([parse_wkt("POINT (25 61)")], tm.geodetic_to_tm35)[0]
+    _assert_identical(g, K.transform_coords(parse_wkt("POINT (25 61)"), tm.geodetic_to_tm35))
+
+
+@pytest.fixture(scope="module")
+def fp_rows(spark, pages_dir):
+    """footprint/lon/lat of the sf0.001 pages, plus edge-case rows: an
+    unknown tag, a nested GEOMETRYCOLLECTION and empties, with and
+    without coordinates."""
+    import pandas as pd
+
+    from fgcspark.extract import with_extracted
+    from fgcspark.pipeline import load_pages
+
+    pages = with_extracted(load_pages(spark, pages_dir)).select("footprint", "lon", "lat")
+    extra = pd.DataFrame(
+        {
+            "footprint": BATCH_WKTS[7:] + [None, None],
+            "lon": [np.nan, 24.5, np.nan, 24.5, np.nan, np.nan, 25.0, np.nan],
+            "lat": [np.nan, 60.5, np.nan, 60.5, np.nan, np.nan, 61.0, np.nan],
+        }
+    )
+    return pd.concat([pages.toPandas(), extra], ignore_index=True)
+
+
+@pytest.mark.parametrize("geo", ["footprint", "bbox"])
+def test_footprint_batch_euref_matches_per_geometry(fp_rows, geo, monkeypatch):
+    """The G10 transform batched over an Arrow batch gives the same
+    WKT as one transform_coords call per geometry."""
+    from fgcspark.pipeline import _footprint_batch
+
+    args = (fp_rows["footprint"], fp_rows["lon"], fp_rows["lat"], True, geo, "euref")
+    got = _footprint_batch(*args).tolist()
+    monkeypatch.setattr(K, "transform_batch", _per_geometry)
+    assert got == _footprint_batch(*args).tolist()
+
+
+def test_fp_probe_udfs_match_per_geometry(fp_rows, monkeypatch):
+    """footprint_join's probe projection, batched, gives the same parts,
+    WKB and bbox as one transform_coords call per geometry."""
+    from fgcspark.joins import fpjoin as J
+
+    args = (fp_rows["footprint"], fp_rows["lon"], fp_rows["lat"])
+    parts, wkb = J._fp_project_parts.func(*args), J._fp_project_wkb.func(*args)
+    monkeypatch.setattr(J, "transform_batch", _per_geometry)
+    want_parts, want_wkb = J._fp_project_parts.func(*args), J._fp_project_wkb.func(*args)
+    assert parts["parts"].tolist() == want_parts["parts"].tolist()
+    assert wkb["wkb"].tolist() == want_wkb["wkb"].tolist()
+    for got, want in ((parts, want_parts), (wkb, want_wkb)):
+        box = ["x0", "y0", "x1", "y1"]
+        assert np.array_equal(got[box].to_numpy(), want[box].to_numpy(), equal_nan=True)
+    # an unknown tag joins as a POLYGON
+    from fgcspark.geom.wkb import from_wkb
+
+    tri = fp_rows.index[fp_rows["footprint"].fillna("").str.startswith("TRIANGLE")][0]
+    assert from_wkb(wkb["wkb"].iloc[tri]).gtype == "POLYGON"

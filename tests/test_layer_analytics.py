@@ -1,54 +1,14 @@
-"""fgcspark.geom.layer_analytics: the batch projection must be
-bit-identical to the per-geometry transform path, and the three Spark
-stages must reproduce the generator goldens (the same check the
-contract gate runs at sf0.01, here at sf0.001 inside pytest)."""
+"""fgcspark.geom.layer_analytics: the three Spark stages must reproduce
+the generator goldens (the same check the contract gate runs at
+sf0.01, here at sf0.001 inside pytest). The batch projection they use
+is tested in test_kernels.py."""
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 import pytest
 
-from fgcspark.crs import tm35fin as tm
-from fgcspark.geom import kernels as K
-from fgcspark.geom.layer_analytics import (
-    layer_hulls,
-    layer_simplify,
-    layer_stats,
-    transform_batch,
-)
-from fgcspark.geom.wkt import parse_wkt, to_wkt
-
-WKTS = [
-    "POINT (24.94 60.17)",
-    "MULTIPOINT ((24 60), (25 61))",
-    "LINESTRING (24 60, 25 61, 26 60.5)",
-    "MULTILINESTRING ((24 60, 25 61), (26 60, 27 61))",
-    "POLYGON ((24 60, 25 60, 25 61, 24 61, 24 60), (24.4 60.4, 24.6 60.4, 24.6 60.6, 24.4 60.6, 24.4 60.4))",
-    "MULTIPOLYGON (((24 60, 25 60, 25 61, 24 60)), ((26 60, 27 60, 27 61, 26 60)))",
-    "GEOMETRYCOLLECTION (POINT (24 60), LINESTRING (24 60, 25 61))",
-    "POLYGON EMPTY",
-]
-
-
-def test_transform_batch_bit_identical_to_per_geom():
-    geoms = [parse_wkt(w) for w in WKTS]
-    batched = transform_batch(geoms, tm.geodetic_to_tm35)
-    single = [K.transform_coords(g, tm.geodetic_to_tm35) for g in geoms]
-    for b, s in zip(batched, single):
-        assert to_wkt(b) == to_wkt(s)
-        # beyond the WKT text: exact float equality on every ring
-        rb, rs = K._rings_of(b), K._rings_of(s)
-        assert len(rb) == len(rs)
-        for a1, a2 in zip(rb, rs):
-            assert np.array_equal(a1.reshape(-1, 2), a2.reshape(-1, 2))
-
-
-def test_transform_batch_empty_and_single():
-    assert transform_batch([], tm.geodetic_to_tm35) == []
-    g = transform_batch([parse_wkt("POINT (25 61)")], tm.geodetic_to_tm35)[0]
-    s = K.transform_coords(parse_wkt("POINT (25 61)"), tm.geodetic_to_tm35)
-    assert to_wkt(g) == to_wkt(s)
+from fgcspark.geom.layer_analytics import layer_hulls, layer_simplify, layer_stats
 
 
 @pytest.fixture(scope="module")

@@ -107,6 +107,49 @@ def test_truncated_and_malformed_blobs_yield_null(spark):
         ), u
 
 
+def test_jpeg_sof_crossing_window_end_is_all_or_nothing(spark):
+    """A SOF whose 10-byte prefix crosses byte HEX_WINDOW sets no field
+    in any of the three parsers (Catalyst, Python, DuckDB SQL); one
+    that ends exactly at the window end parses in full."""
+    import duckdb
+    import pandas as pd
+
+    sof = (
+        b"\xff\xc0\x00\x11\x08"
+        + (222).to_bytes(2, "big")
+        + (333).to_bytes(2, "big")
+        + b"\x03" + b"\x01\x11\x00" * 3
+    )
+    rows, want = [], {}
+    for off in range(mm.HEX_WINDOW - 12, mm.HEX_WINDOW - 4):
+        # one APP0 segment pushes the SOF marker to byte `off`
+        app = b"\xff\xe0" + (off - 4).to_bytes(2, "big") + b"\x00" * (off - 6)
+        rows.append((f"sof{off}", b"\xff\xd8" + app + sof))
+        fits = off + 10 <= mm.HEX_WINDOW
+        want[f"sof{off}"] = ("jpeg", 333, 222, 3) if fits else ("jpeg", None, None, None)
+    py = {u: mm._parse_header(b) for u, b in rows}
+    df = spark.createDataFrame(rows, "url string, media binary")
+    jvm = {
+        r["url"]: (r["fmt"], r["width"], r["height"], r["channels"])
+        for r in mm.media_metadata(df).collect()
+    }
+    con = duckdb.connect()
+    con.register(
+        "src",
+        pd.DataFrame(
+            {"url": [u for u, _ in rows], "hx": [b[: mm.HEX_WINDOW].hex().upper() for _, b in rows]}
+        ),
+    )
+    sql = (
+        f"WITH hsrc AS (SELECT url, hx FROM src),\n{mm.media_header_sql()}\n"
+        "SELECT url, fmt, width, height, channels FROM hdr"
+    )
+    ddb = {u: tuple(v) for u, *v in con.execute(sql).fetchall()}
+    assert py == want
+    assert jvm == want
+    assert ddb == want
+
+
 def test_header_parsers_roundtrip_randomized(spark):
     """Property: randomized VALID headers (dims, channels, JPEG segment
     chains of varying shape — multiple APPn + COM segments with

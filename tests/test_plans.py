@@ -186,3 +186,55 @@ def test_ring_counts_single_source_scan(spark, pages_dir):
     assert "Scan parquet" not in plan and "FileScan" not in plan
     assert "Scan ExistingRDD" in plan
     assert out.count() > 0
+
+
+def arrow_eval_udfs(df) -> list[set[str]]:
+    """UDF names of every ArrowEvalPython node in df's physical plan.
+    Asserts that no such node has another one for the same function in
+    its own subtree: that is one Python UDF evaluated twice on the same
+    rows, which Catalyst produces when it pushes a filter on the UDF's
+    output below the projection that computes it."""
+    found: list[set[str]] = []
+
+    def walk(node) -> set[str]:
+        kids = node.children()
+        below: set[str] = set()
+        for i in range(kids.size()):
+            below |= walk(kids.apply(i))
+        if node.nodeName() == "ArrowEvalPython":
+            udfs = node.udfs()
+            names = {udfs.apply(i).name() for i in range(udfs.size())}
+            assert not names & below, f"{sorted(names & below)} evaluated twice"
+            found.append(names)
+            below |= names
+        return below
+
+    walk(df._jdf.queryExecution().sparkPlan())
+    return found
+
+
+@pytest.mark.parametrize("refine, udfs", [("expr", 1), ("pandas", 2)])
+def test_footprint_join_probe_udf_runs_once(spark, pages_dir, refine, udfs):
+    """footprint_join evaluates its parse/project UDF once per row: the
+    expression refine has that one ArrowEvalPython node, the numpy
+    refine adds only its own refine UDF above the join."""
+    from fgcspark.extract import with_extracted
+    from fgcspark.joins.fpjoin import footprint_join
+    from fgcspark.pipeline import load_pages
+
+    polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
+    pages = with_extracted(load_pages(spark, pages_dir))
+    for probe in (pages, pages.hint("merge")):
+        found = arrow_eval_udfs(footprint_join(spark, probe, polys, refine=refine))
+        assert len(found) == udfs, found
+        project = "_fp_project_parts" if refine == "expr" else "_fp_project_wkb"
+        assert sum(project in names for names in found) == 1
+
+
+def test_dwithin_partitioned_probe_udf_runs_once(spark, pts, pages_dir):
+    from fgcspark.joins.dwithin import dwithin_join_partitioned
+
+    probes = spark.read.parquet(f"{pages_dir}/probes.parquet")
+    df = dwithin_join_partitioned(spark, pts.select("url", "e", "n"), probes, 25_000.0)
+    found = arrow_eval_udfs(df)
+    assert sum("_probe_en" in names for names in found) == 1
