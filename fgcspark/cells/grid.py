@@ -116,13 +116,3 @@ def ring_counts(probes: DataFrame, counts: DataFrame, k: int = 2) -> DataFrame:
         .groupBy("cell", "n_docs")
         .agg(F.sum("_nn").alias("n_docs_ring"))
     )
-
-
-def cell_id_np(easting, northing, size_km: int):
-    """numpy twin of cell_id for use inside pandas-UDF kernels/oracles."""
-    import numpy as np
-
-    size_m = size_km * 1000
-    n_b = np.floor(np.asarray(northing, dtype=np.float64) / size_m).astype(np.int64)
-    e_b = np.floor(np.asarray(easting, dtype=np.float64) / size_m).astype(np.int64)
-    return np.char.add(np.char.add(n_b.astype(str), ":"), e_b.astype(str))

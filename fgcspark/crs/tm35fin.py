@@ -13,7 +13,7 @@ for 3067: lon0=27 deg, k0=0.9996, FE=500000, FN=0.
 
 All functions are vectorized over numpy arrays and elementwise, so a
 coordinate's result does not depend on what else is in the call. The
-point UDFs (pipeline.point_en, knn.probe_en) and the footprint kernels
+point UDF (pipeline.point_en) and the footprint kernels
 (pipeline._footprint_batch's G10 output transform, fpjoin's probe
 projection, layer_analytics) call them once per Arrow batch. Some
 call sites still call them once per geometry inside a batch: the G5

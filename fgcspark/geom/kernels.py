@@ -30,7 +30,6 @@ _KNOWN_FAMILY = {
     POLYGON: POLYGON,
     MULTIPOLYGON: POLYGON,
 }
-_MULTI_OF = {POINT: MULTIPOINT, LINESTRING: MULTILINESTRING, POLYGON: MULTIPOLYGON}
 
 
 def transform_coords(g: Geom, fn) -> Geom:

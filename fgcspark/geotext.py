@@ -153,8 +153,8 @@ def entity_range(
     min / max), so there is no floating-point summation surface; the
     bbox edges are rounded to millimeters because the engine's
     projected e/n and an independent oracle's can differ at the
-    O(1e-9 m) transcendental-ulp level (see pipeline.pages_to_points_jvm
-    docstring), and 1e-9 cannot cross a 1e-3 rounding boundary.
+    O(1e-9 m) transcendental-ulp level (libm vs another runtime's
+    sin/cos/atanh), and 1e-9 cannot cross a 1e-3 rounding boundary.
 
     Scale shape: explode + ONE map-side-combined shuffle keyed by
     entity; count(distinct cell) goes through Spark's two-phase expand

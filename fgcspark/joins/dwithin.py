@@ -81,28 +81,21 @@ def dwithin_join_partitioned(
     """Exact distance-within join with an UNBOUNDED probe side — the
     distributed twin of dwithin_join (same output, cf. the kNN pair).
 
-    Probes stay a DataFrame: projected to the plane by the same numpy
-    kernel as the page side (knn.probe_en), fanned out to candidate
-    cells by a crossJoin with the broadcast OFFSET table above
+    Probes stay a DataFrame: projected to the plane by the page side's
+    own UDF (knn.project_probes), fanned out to candidate cells by a
+    crossJoin with the broadcast OFFSET table above
     (O((R/s)^2) rows, probe-count-independent), then a shuffle
     equi-join on the cell id against the page projection and the same
     exact squared-distance filter. Nothing is collected; both sides
     shuffle once on the cell key, and skewed cells split naturally
     because each probe-cell pair is its own join row."""
-    from fgcspark.joins.knn import probe_en
+    from fgcspark.joins.knn import project_probes
 
     s = float(cell_km * 1000)
     offs = spark.createDataFrame(
         _cover_offsets(float(radius_m), s), schema="dn long, de long"
     )
-    pr = probes.select("probe_id", probe_en("lon", "lat").alias("_p")).select(
-        "probe_id",
-        F.col("_p.e").alias("pe"),
-        F.col("_p.n").alias("pn"),
-        F.floor(F.col("_p.n") / s).cast("long").alias("pcell_n"),
-        F.floor(F.col("_p.e") / s).cast("long").alias("pcell_e"),
-    )
-    cells = pr.crossJoin(F.broadcast(offs)).select(
+    cells = project_probes(probes, s).crossJoin(F.broadcast(offs)).select(
         "probe_id",
         "pe",
         "pn",

@@ -27,41 +27,35 @@ Physical shape (reworked per round-1 verdict #7):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import window as W
-from pyspark.sql.functions import pandas_udf
 from pyspark.storagelevel import StorageLevel
 
 from fgcspark.crs import tm35fin as tm
-
-
-from pyspark.sql import types as T
-
-_EN = T.StructType(
-    [T.StructField("e", T.DoubleType()), T.StructField("n", T.DoubleType())]
-)
-
-
-@pandas_udf(_EN)
-def _probe_en(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-    """Probe projection through the SAME numpy kernel as the page side,
-    so distances stay bit-identical to the brute-force golden."""
-    e, n = tm.geodetic_to_tm35(lon.to_numpy(), lat.to_numpy())
-    return pd.DataFrame({"e": e, "n": n})
-
-
-# Nondeterministic for the reason given at pipeline.point_en: otherwise
-# the join's null filters on e/n are pushed below the projection and
-# the probe UDF runs twice per row.
-probe_en = _probe_en.asNondeterministic()
+from fgcspark.pipeline import point_en
 
 DEFAULT_CELL_KM = 50
 # the probe set is driver-resident by contract (collected + broadcast
 # per ring batch); cap it explicitly so a misuse fails loudly instead
 # of OOMing the driver
 _MAX_PROBES = 100_000
+
+
+def project_probes(probes: DataFrame, s: float) -> DataFrame:
+    """(probe_id, pe, pn, pcell_n, pcell_e): each (probe_id, lon, lat)
+    probe in EPSG:3067 and its cell of side `s` metres. The projection
+    is pipeline.point_en, the page side's own UDF; probes carry no
+    footprint, so it only projects them. Distances stay bit-identical
+    to the brute-force golden."""
+    en = point_en("lon", "lat", F.lit(None).cast("string"))
+    return probes.select("probe_id", en.alias("_p")).select(
+        "probe_id",
+        F.col("_p.e").alias("pe"),
+        F.col("_p.n").alias("pn"),
+        F.floor(F.col("_p.n") / s).cast("long").alias("pcell_n"),
+        F.floor(F.col("_p.e") / s).cast("long").alias("pcell_e"),
+    )
 
 
 def _ring_offsets(r_lo: int, r_hi: int) -> list[tuple[int, int]]:
@@ -91,9 +85,9 @@ def knn_join_partitioned(
     the data. Same certification bound and tie rules, different
     physical shape:
 
-    - probes are projected to EPSG:3067 by the SAME numpy kernel as
-      the page side (whole-batch pandas UDF), so distances are
-      bit-identical to knn_join and the brute-force golden;
+    - probes are projected to EPSG:3067 by the page side's own UDF
+      (project_probes), so distances are bit-identical to knn_join
+      and the brute-force golden;
     - each round, the ACTIVE probe frontier cross-joins a broadcast
       ring-offset table (O((2r+1)^2) rows, probe-count-independent)
       to enumerate its candidate cells, then equi-joins the page
@@ -124,17 +118,7 @@ def knn_join_partitioned(
         .repartition(nshuf, "cell_n", "cell_e")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    active = (
-        probes.select("probe_id", probe_en("lon", "lat").alias("_p"))
-        .select(
-            "probe_id",
-            F.col("_p.e").alias("pe"),
-            F.col("_p.n").alias("pn"),
-            F.floor(F.col("_p.n") / s).cast("long").alias("pcell_n"),
-            F.floor(F.col("_p.e") / s).cast("long").alias("pcell_e"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    active = project_probes(probes, s).persist(StorageLevel.MEMORY_AND_DISK)
 
     win = W.Window.partitionBy("probe_id").orderBy("dist", key_col)
     state: DataFrame | None = None  # running top-k of ACTIVE probes

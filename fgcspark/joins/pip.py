@@ -280,7 +280,7 @@ def pip_join(
 ) -> DataFrame:
     """Exact PIP join: returns (key_col, poly_id) rows.
 
-    `points` must carry EPSG:3067 `e`/`n` columns (pipeline.with_tm35).
+    `points` must carry EPSG:3067 `e`/`n` columns (pipeline.with_points).
     The plan is the module's one join: executor-built cover, cell
     equi-join with the strategy left to Spark, bbox prefilter, refine.
     `cache_key` is accepted for compatibility and ignored: the layer

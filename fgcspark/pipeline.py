@@ -42,53 +42,9 @@ GEO_MODES = ("point", "bbox", "footprint")
 CRS_MODES = ("wgs84", "euref")
 
 
-def fmt7(x: float) -> str:
-    return f"{x:.7f}"
-
-
 # ---------------------------------------------------------------------------
 # vectorized UDF kernels
 # ---------------------------------------------------------------------------
-
-
-_LONLAT = T.StructType(
-    [T.StructField("lon", T.DoubleType()), T.StructField("lat", T.DoubleType())]
-)
-_EN = T.StructType(
-    [T.StructField("e", T.DoubleType()), T.StructField("n", T.DoubleType())]
-)
-
-
-@pandas_udf(_LONLAT)
-def _centroid_lonlat(wkt: pd.Series) -> pd.DataFrame:
-    """G3 centroid fallback (reference R/finbif_geo_convert.R:182-200,
-    555-561): planar centroid of the footprint WKT in its input frame.
-    Null/unparseable/empty -> null."""
-    lon = np.full(len(wkt), np.nan)
-    lat = np.full(len(wkt), np.nan)
-    for i, s in enumerate(wkt):
-        if s is None:
-            continue
-        try:
-            c = K.centroid(parse_wkt(s))
-        except Exception:
-            c = None
-        if c is not None:
-            lon[i], lat[i] = c
-    return pd.DataFrame({"lon": lon, "lat": lat})
-
-
-@pandas_udf(_EN)
-def _lonlat_to_tm35(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-    """G10 forward transform 4326 -> 3067, whole-batch numpy."""
-    e, n = tm.geodetic_to_tm35(lon.to_numpy(), lat.to_numpy())
-    return pd.DataFrame({"e": e, "n": n})
-
-
-@pandas_udf(_LONLAT)
-def _tm35_to_lonlat(e: pd.Series, n: pd.Series) -> pd.DataFrame:
-    lon, lat = tm.tm35_to_geodetic(e.to_numpy(), n.to_numpy())
-    return pd.DataFrame({"lon": lon, "lat": lat})
 
 
 _PointEN = T.StructType(
@@ -106,7 +62,10 @@ def _point_en(lon: pd.Series, lat: pd.Series, fp: pd.Series) -> pd.DataFrame:
     """Fused G2+G3+G10: point lon/lat (coords, else footprint centroid)
     AND its EPSG:3067 projection in ONE Arrow pass. One UDF level
     instead of two halves the Python-worker count and Arrow IPC per
-    row — chained pandas UDFs each get their own PythonRunner."""
+    row — chained pandas UDFs each get their own PythonRunner. It is
+    the engine's one point projection: the spatial core, geo_transform's
+    point mode, the streaming ingest and the kNN/dwithin probes all run
+    it."""
     lon_v = lon.to_numpy(dtype=np.float64, na_value=np.nan).copy()
     lat_v = lat.to_numpy(dtype=np.float64, na_value=np.nan).copy()
     need = np.isnan(lon_v) | np.isnan(lat_v)
@@ -119,8 +78,8 @@ def _point_en(lon: pd.Series, lat: pd.Series, fp: pd.Series) -> pd.DataFrame:
         except Exception:
             c = None
         if c is not None:
-            # per-axis coalesce, identical to with_point: a present
-            # coordinate is never overwritten by the centroid
+            # per-axis coalesce: a present coordinate is never
+            # overwritten by the centroid
             if np.isnan(lon_v[i]):
                 lon_v[i] = c[0]
             if np.isnan(lat_v[i]):
@@ -129,15 +88,12 @@ def _point_en(lon: pd.Series, lat: pd.Series, fp: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"plon": lon_v, "plat": lat_v, "e": e, "n": n})
 
 
-# Marked nondeterministic on purpose (they are in fact deterministic):
+# Marked nondeterministic on purpose (it is in fact deterministic):
 # it stops Catalyst pushing join-key null filters below the projection,
-# which would DUPLICATE the whole ArrowEvalPython chain — observed 4
-# UDF nodes instead of 2 and a ~7x slowdown of the PIP candidate join
-# at sf0.1. The trade (no filter pushdown through the UDF stage) is
-# cheap: every plan filters AFTER geometry materialization anyway.
-centroid_lonlat = _centroid_lonlat.asNondeterministic()
-lonlat_to_tm35 = _lonlat_to_tm35.asNondeterministic()
-tm35_to_lonlat = _tm35_to_lonlat.asNondeterministic()
+# which would DUPLICATE the ArrowEvalPython node — observed 4 UDF nodes
+# instead of 2 and a ~7x slowdown of the PIP candidate join at sf0.1.
+# The trade (no filter pushdown through the UDF stage) is cheap: every
+# plan filters AFTER geometry materialization anyway.
 point_en = _point_en.asNondeterministic()
 
 
@@ -166,16 +122,12 @@ def _footprint_batch(
         if geo == "footprint" and g.gtype == GEOMETRYCOLLECTION and not g.is_empty:
             g = K.transform_coords(g, tm.geodetic_to_tm35)
             g = K.uncollect(g, digits=0)
-            g = K.transform_coords(g, tm35_inverse)
+            g = K.transform_coords(g, tm.tm35_to_geodetic)
         # G8: output is always MULTI*
         out.append(K.cast_to_multi(g))
     if crs == "euref":
         out = K.transform_batch(out, tm.geodetic_to_tm35)
     return pd.Series([to_wkt(g) for g in out])
-
-
-def tm35_inverse(x, y):
-    return tm.tm35_to_geodetic(x, y)
 
 
 def _bbox_batch(fp_wkt: pd.Series, crs: str) -> pd.Series:
@@ -194,7 +146,7 @@ def _bbox_batch(fp_wkt: pd.Series, crs: str) -> pd.Series:
             else:
                 e, n = tm.geodetic_to_tm35(x, y)
                 g = Geom("POLYGON", K.point_diamond(float(e), float(n), 0.5))
-                g = K.transform_coords(g, tm35_inverse)
+                g = K.transform_coords(g, tm.tm35_to_geodetic)
         out.append(to_wkt(K.bbox_polygon(g)))
     return pd.Series(out)
 
@@ -208,28 +160,22 @@ def load_pages(spark, data_dir: str) -> DataFrame:
     return spark.read.parquet(f"{data_dir}/pages.parquet")
 
 
-def with_point(df: DataFrame) -> DataFrame:
-    """G2/G3: point lon/lat per row — coords when present, else footprint
-    centroid (reference R/finbif_geo_convert.R:129-238). The centroid
-    UDF receives NULL for rows that already have coords, so the Python
-    stage does no WKT work for the ~97 % fast path."""
-    need_centroid = F.col("lon").isNull() | F.col("lat").isNull()
-    cen = centroid_lonlat(F.when(need_centroid, F.col("footprint")))
+def with_points(df: DataFrame) -> DataFrame:
+    """G2/G3 + G10: point lon/lat per row (`plon`/`plat`: coords when
+    present, else the footprint centroid, reference
+    R/finbif_geo_convert.R:129-238) and its EPSG:3067 projection
+    (`e`/`n`), all from one point_en evaluation."""
+    # null the footprint for rows with coords: ~97 % of the Arrow batch
+    # bytes shipped to Python are footprint WKT the kernel won't read
+    need_fp = F.col("lon").isNull() | F.col("lat").isNull()
+    p = point_en(F.col("lon"), F.col("lat"), F.when(need_fp, F.col("footprint")))
     return (
-        df.withColumn("_cen", cen)
-        .withColumn("plon", F.coalesce(F.col("lon"), F.col("_cen.lon")))
-        .withColumn("plat", F.coalesce(F.col("lat"), F.col("_cen.lat")))
-        .drop("_cen")
-    )
-
-
-def with_tm35(df: DataFrame, lon_col: str = "plon", lat_col: str = "plat") -> DataFrame:
-    en = lonlat_to_tm35(F.col(lon_col), F.col(lat_col))
-    return (
-        df.withColumn("_en", en)
-        .withColumn("e", F.col("_en.e"))
-        .withColumn("n", F.col("_en.n"))
-        .drop("_en")
+        df.withColumn("_p", p)
+        .withColumn("plon", F.col("_p.plon"))
+        .withColumn("plat", F.col("_p.plat"))
+        .withColumn("e", F.col("_p.e"))
+        .withColumn("n", F.col("_p.n"))
+        .drop("_p")
     )
 
 
@@ -242,59 +188,7 @@ def with_tiles(df: DataFrame, sizes=grid.SIZES_KM) -> DataFrame:
 def pages_to_points(spark, data_dir: str) -> DataFrame:
     """scan -> extract -> point+project (one fused UDF) -> tiles. The
     engine's workhorse prefix: every spatial query builds on this plan."""
-    df = with_extracted(load_pages(spark, data_dir))
-    # null the footprint for rows with coords: ~97 % of the Arrow batch
-    # bytes shipped to Python are footprint WKT the kernel won't read
-    need_fp = F.col("lon").isNull() | F.col("lat").isNull()
-    p = point_en(F.col("lon"), F.col("lat"), F.when(need_fp, F.col("footprint")))
-    df = (
-        df.withColumn("_p", p)
-        .withColumn("plon", F.col("_p.plon"))
-        .withColumn("plat", F.col("_p.plat"))
-        .withColumn("e", F.col("_p.e"))
-        .withColumn("n", F.col("_p.n"))
-        .drop("_p")
-    )
-    return with_tiles(df)
-
-
-def pages_to_points_jvm(spark, data_dir: str) -> DataFrame:
-    """Hybrid zero-Python workhorse: rows that carry parsed lon/lat
-    (~99.7 %) are projected by the Catalyst TM35FIN expression
-    (crs/tm35fin_expr.py — whole-stage codegen, no Python workers);
-    only rows needing the G3 footprint-centroid fallback go through
-    the numpy UDF. Same columns as pages_to_points; e/n may differ
-    from the numpy kernel by O(1e-9 m) on the JVM-projected rows
-    (java.lang.Math vs libm transcendentals), which cannot move any
-    km-grid cell id (boundary-clearance asserted in test_crs_expr.py).
-
-    At 100 TB this is the preferred core: the scan -> extract ->
-    project -> tile prefix is one codegen stage; the Python worker
-    pool only ever sees the rare footprint-only rows."""
-    from fgcspark.crs.tm35fin_expr import tm35_cols
-
-    df = with_extracted(load_pages(spark, data_dir))
-    has_coords = F.col("lon").isNotNull() & F.col("lat").isNotNull()
-    jvm = (
-        df.where(has_coords)
-        .withColumn("_en", tm35_cols(F.col("lon"), F.col("lat")))
-        .withColumn("plon", F.col("lon"))
-        .withColumn("plat", F.col("lat"))
-        .withColumn("e", F.col("_en.e"))
-        .withColumn("n", F.col("_en.n"))
-        .drop("_en")
-    )
-    p = point_en(F.col("lon"), F.col("lat"), F.col("footprint"))
-    py = (
-        df.where(~has_coords)
-        .withColumn("_p", p)
-        .withColumn("plon", F.col("_p.plon"))
-        .withColumn("plat", F.col("_p.plat"))
-        .withColumn("e", F.col("_p.e"))
-        .withColumn("n", F.col("_p.n"))
-        .drop("_p")
-    )
-    return with_tiles(jvm.unionByName(py))
+    return with_tiles(with_points(with_extracted(load_pages(spark, data_dir))))
 
 
 def count_substitution_rows(df: DataFrame) -> int:
@@ -324,9 +218,8 @@ def geo_transform(df: DataFrame, geo: str = "point", crs: str = "wgs84") -> Data
     archive path (occurrence rows, the reference's native input)."""
     assert geo in GEO_MODES and crs in CRS_MODES
     if geo == "point":
-        df = with_point(df)
+        df = with_points(df)
         if crs == "euref":
-            df = with_tm35(df)
             x, y = F.col("e"), F.col("n")
         else:
             x, y = F.col("plon"), F.col("plat")
@@ -339,6 +232,8 @@ def geo_transform(df: DataFrame, geo: str = "point", crs: str = "wgs84") -> Data
             ),
         ).otherwise(F.lit("POINT EMPTY"))
         df = df.withColumn("geo_wkt", wkt)
+        if crs == "wgs84":
+            df = df.drop("e", "n")
     else:
         substitute = count_substitution_rows(df) > 1
         geo_b, crs_b = geo, crs

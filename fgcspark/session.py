@@ -12,6 +12,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MEM = 48 << 30
+
+
+def driver_memory() -> str:
+    """spark.driver.memory: $FGC_DRIVER_MEM when set, else half the
+    host's physical memory capped at 48g. A fixed 48g default let the
+    JVM size its heap past what a smaller host holds."""
+    env = os.environ.get("FGC_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2, _MAX_DRIVER_MEM) >> 20}m"
+
 
 def get_spark(
     app_name: str = "fgcspark",
@@ -58,7 +71,7 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             os.environ.get("FGC_ARROW_BATCH", "65536"),
         )
-        .config("spark.driver.memory", os.environ.get("FGC_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -44,20 +44,13 @@ def read_pages_stream(
 
 def pages_stream_to_points(stream: DataFrame) -> DataFrame:
     """The batch pipeline's extract -> point -> project -> tile prefix
-    applied to a streaming DataFrame (identical column logic)."""
+    applied to a streaming DataFrame (the same pipeline.with_points
+    stage)."""
     from fgcspark.cells import grid
     from fgcspark.extract import with_extracted
-    from fgcspark.pipeline import point_en
+    from fgcspark.pipeline import with_points
 
-    df = with_extracted(stream)
-    need_fp = F.col("lon").isNull() | F.col("lat").isNull()
-    p = point_en(F.col("lon"), F.col("lat"), F.when(need_fp, F.col("footprint")))
-    df = df.withColumn("_p", p).select(
-        "url",
-        "warc_ts",
-        F.col("_p.e").alias("e"),
-        F.col("_p.n").alias("n"),
-    )
+    df = with_points(with_extracted(stream)).select("url", "warc_ts", "e", "n")
     return df.withColumn("cell_10km", grid.cell_id(F.col("e"), F.col("n"), 10))
 
 

@@ -124,9 +124,12 @@ def focal_density(counts: DataFrame, weights=BINOMIAL) -> DataFrame:
     list + a map-side-combinable groupBy on the shifted cell key: two
     small shuffles over the per-cell aggregate (already orders of
     magnitude smaller than the doc table), never over the documents.
-    Integer weights keep both passes in exact long arithmetic, so the
-    result is bit-identical to the direct 2-D sum regardless of
-    association order.
+    Each occupied cell's own `cell`/`n_docs` ride through both passes
+    on its zero-offset term, so `counts` is read once: a join back to
+    it would re-run its whole plan (the point UDF is nondeterministic,
+    so Spark cannot reuse that exchange). Integer weights keep both
+    passes in exact long arithmetic, so the result is bit-identical to
+    the direct 2-D sum regardless of association order.
 
     `counts`: (cell, n_docs) as produced by `pipeline.tile_counts`.
     Returns (cell, n_docs, wsum, density) for the occupied cells only;
@@ -142,22 +145,27 @@ def focal_density(counts: DataFrame, weights=BINOMIAL) -> DataFrame:
     nb = F.split(F.col("cell"), ":")[0].cast("long")
     eb = F.split(F.col("cell"), ":")[1].cast("long")
     base = counts.select("cell", "n_docs", nb.alias("_nb"), eb.alias("_eb"))
+    # the source cell's own columns, non-null only on its zero offset
+    own = [
+        F.max(F.when(F.col("_o.d") == 0, F.col(c))).alias(c) for c in ("cell", "n_docs")
+    ]
 
     # pass 1: blur along easting — contribution of each cell lands on
     # the shifted key, summed map-side before the shuffle
     p1 = (
         base.withColumn("_o", F.explode(offs))
         .groupBy(F.col("_nb"), (F.col("_eb") + F.col("_o.d")).alias("_eb"))
-        .agg(F.sum(F.col("n_docs") * F.col("_o.w")).alias("_s1"))
+        .agg(F.sum(F.col("n_docs") * F.col("_o.w")).alias("_s1"), *own)
     )
     # pass 2: blur along northing over the pass-1 surface
     p2 = (
         p1.withColumn("_o", F.explode(offs))
         .groupBy((F.col("_nb") + F.col("_o.d")).alias("_nb"), F.col("_eb"))
-        .agg(F.sum(F.col("_s1") * F.col("_o.w")).alias("wsum"))
+        .agg(F.sum(F.col("_s1") * F.col("_o.w")).alias("wsum"), *own)
     )
     total = int(sum(weights)) ** 2
-    return base.join(p2, ["_nb", "_eb"]).select(
+    # a key is an occupied cell iff its zero-offset term carried one
+    return p2.where(F.col("n_docs").isNotNull()).select(
         "cell",
         "n_docs",
         F.col("wsum").cast("long").alias("wsum"),

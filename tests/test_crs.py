@@ -6,6 +6,7 @@ behavior). Target accuracy: sub-mm (SURVEY.md §2.6 G10 — the GC kernel
 rounds to integer meters, reference R/finbif_geo_convert.R:462)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from fgcspark.crs import tm35fin as tm
@@ -70,3 +71,15 @@ def test_finland_envelope_plausible():
     )
     assert ((e > 40000) & (e < 800000)).all()
     assert ((n > 6500000) & (n < 7900000)).all()
+
+
+def test_generated_points_clear_of_km_boundaries(pages_dir):
+    """A property of the generator: every dataset point is > 1e-6 m
+    from every 1 km grid line, so an O(1e-9 m) projection difference
+    (another runtime's transcendentals, as in an independent oracle)
+    can never flip any 1/10/50/100 km cell id."""
+    truth = pd.read_parquet(f"{pages_dir}/truth.parquet")
+    for col in ("e", "n"):
+        frac = np.abs(truth[col].to_numpy()) % 1000.0
+        dist = np.minimum(frac, 1000.0 - frac)
+        assert dist.min() > 1e-6

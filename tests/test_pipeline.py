@@ -3,15 +3,23 @@
 class-only asserts). Truths come from the generator's forward
 computation, independent of the engine's extraction/kernels."""
 
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from fgcspark.crs import tm35fin as tm
+from fgcspark.geom import kernels as K
+from fgcspark.geom.wkt import parse_wkt
 from fgcspark.pipeline import (
     geo_pipeline,
+    geo_transform,
     load_pages,
     pages_to_points,
     tile_counts,
+    with_points,
     write_layered,
 )
 
@@ -130,29 +138,104 @@ def test_raster_assemble_dense_roundtrip(spark, pages_dir):
     assert sparse.exceptAll(per_cell).count() == 0
 
 
-def test_point_en_mixed_null_matches_with_point(spark):
-    """A row with exactly one coordinate present: the fused _point_en
-    kernel must coalesce PER AXIS like with_point — never overwrite the
-    present coordinate with the centroid (ADVICE r1)."""
-    from pyspark.sql import functions as F
+_FP = "POLYGON ((24.0 60.0, 25.0 60.0, 25.0 61.0, 24.0 61.0, 24.0 60.0))"
+# one coordinate missing, both missing, both present: the centroid fills
+# a missing axis only, never a present one (ADVICE r1)
+_MIXED = [
+    ("mixed-lat-null", 24.2, None, _FP),
+    ("mixed-lon-null", None, 60.4, _FP),
+    ("mixed-both-null", None, None, _FP),
+    ("mixed-both-set", 24.2, 60.4, _FP),
+]
+_DROPPED = ("lat", "lon", "lat_s", "lon_s", "footprint")
 
-    from fgcspark.pipeline import point_en, with_point
 
-    fp = "POLYGON ((24.0 60.0, 25.0 60.0, 25.0 61.0, 24.0 61.0, 24.0 60.0))"
-    df = spark.createDataFrame(
-        [
-            (24.2, None, fp),      # lat missing
-            (None, 60.4, fp),      # lon missing
-            (None, None, fp),      # both missing -> centroid
-            (24.2, 60.4, fp),      # both present -> untouched
-        ],
-        "lon double, lat double, footprint string",
+def _ref_point(lon, lat, fp):
+    """One row's (plon, plat, e, n), numpy by hand: the coordinates,
+    each missing axis filled from the footprint centroid, then EPSG:3067."""
+    lon = np.nan if lon is None else lon
+    lat = np.nan if lat is None else lat
+    if (np.isnan(lon) or np.isnan(lat)) and fp is not None:
+        try:
+            c = K.centroid(parse_wkt(fp))
+        except Exception:
+            c = None
+        if c is not None:
+            lon = c[0] if np.isnan(lon) else lon
+            lat = c[1] if np.isnan(lat) else lat
+    e, n = tm.geodetic_to_tm35(np.array([lon]), np.array([lat]))
+    return tuple(None if np.isnan(v) else float(v) for v in (lon, lat, e[0], n[0]))
+
+
+def _fmt7(x: float) -> str:
+    """Java's %.7f, which Spark's format_string uses: the shortest
+    round-trip digits, rounded half-up."""
+    return str(Decimal(repr(x)).quantize(Decimal("1e-7"), rounding=ROUND_HALF_UP))
+
+
+@pytest.fixture(scope="module")
+def mixed_src(spark, pages_dir):
+    """The extracted sf0.001 pages plus the four mixed-null rows, and the
+    numpy reference point of every row, keyed by url."""
+    from fgcspark.extract import with_extracted
+
+    mixed = spark.createDataFrame(
+        _MIXED, "url string, lon double, lat double, footprint string"
     )
-    fused = df.withColumn("_p", point_en("lon", "lat", "footprint")).select(
-        F.col("_p.plon").alias("plon"), F.col("_p.plat").alias("plat")
+    src = with_extracted(load_pages(spark, pages_dir)).unionByName(
+        mixed, allowMissingColumns=True
     )
-    twostep = with_point(df).select("plon", "plat")
-    assert [tuple(r) for r in fused.collect()] == [tuple(r) for r in twostep.collect()]
-    rows = fused.collect()
-    assert rows[0]["plon"] == 24.2 and abs(rows[0]["plat"] - 60.5) < 0.01
-    assert rows[1]["plat"] == 60.4 and abs(rows[1]["plon"] - 24.5) < 0.01
+    rows = src.select("url", "lon", "lat", "footprint").collect()
+    assert len(rows) == 2000 + len(_MIXED)
+    ref = {r["url"]: _ref_point(r["lon"], r["lat"], r["footprint"]) for r in rows}
+    return src, rows, ref
+
+
+@pytest.mark.parametrize("crs", ["wgs84", "euref"])
+def test_point_geo_pipeline_matches_numpy_reference(spark, pages_dir, mixed_src, crs):
+    src, _, ref = mixed_src
+    cols = [c for c in src.columns if c not in _DROPPED] + ["plon", "plat"]
+    cols += (["e", "n"] if crs == "euref" else []) + ["geo_wkt", "geom_type"]
+    assert geo_pipeline(spark, pages_dir, geo="point", crs=crs).columns == cols
+    out = geo_transform(src, "point", crs)
+    assert out.columns == cols
+    got = out.select("url", *cols[cols.index("plon") :]).collect()
+    assert len(got) == len(ref)
+    for r in got:
+        plon, plat, e, n = ref[r["url"]]
+        x, y = (e, n) if crs == "euref" else (plon, plat)
+        wkt = "POINT EMPTY" if plon is None else f"POINT ({_fmt7(x)} {_fmt7(y)})"
+        assert (r["plon"], r["plat"]) == (plon, plat), r
+        if crs == "euref":
+            assert (r["e"], r["n"]) == (e, n), r
+        assert (r["geo_wkt"], r["geom_type"]) == (wkt, wkt.split(" ")[0]), r
+
+
+def test_point_stage_matches_numpy_reference(spark, pages_dir, mixed_src):
+    """pages_to_points over the pages, and its with_points stage over
+    the mixed-null rows too."""
+    src, _, ref = mixed_src
+    pages = {u: p for u, p in ref.items() if not u.startswith("mixed-")}
+    for df, want in ((pages_to_points(spark, pages_dir), pages), (with_points(src), ref)):
+        got = df.select("url", "plon", "plat", "e", "n").collect()
+        assert len(got) == len(want)
+        assert {r["url"]: tuple(r)[1:] for r in got} == want
+
+
+def test_knn_probe_projection_matches_numpy_reference(spark, mixed_src):
+    """Probes carry no footprint: a missing coordinate stays missing."""
+    from fgcspark.joins.knn import project_probes
+
+    _, rows, _ = mixed_src
+    s = 50_000.0
+    probes = spark.createDataFrame(
+        [(i, r["lon"], r["lat"]) for i, r in enumerate(rows)],
+        "probe_id long, lon double, lat double",
+    )
+    got = {r["probe_id"]: tuple(r)[1:] for r in project_probes(probes, s).collect()}
+    want = {}
+    for i, r in enumerate(rows):
+        _, _, e, n = _ref_point(r["lon"], r["lat"], None)
+        cells = (None, None) if e is None else (int(np.floor(n / s)), int(np.floor(e / s)))
+        want[i] = (e, n, *cells)
+    assert got == want

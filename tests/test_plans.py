@@ -235,6 +235,31 @@ def test_dwithin_partitioned_probe_udf_runs_once(spark, pts, pages_dir):
     from fgcspark.joins.dwithin import dwithin_join_partitioned
 
     probes = spark.read.parquet(f"{pages_dir}/probes.parquet")
-    df = dwithin_join_partitioned(spark, pts.select("url", "e", "n"), probes, 25_000.0)
-    found = arrow_eval_udfs(df)
-    assert sum("_probe_en" in names for names in found) == 1
+    page_side = pts.select("url", "e", "n")
+    df = dwithin_join_partitioned(spark, page_side, probes, 25_000.0)
+    # the probe side adds one _point_en node to the page side's own
+    # (none when another test has cached that projection)
+    n_page = sum("_point_en" in names for names in arrow_eval_udfs(page_side))
+    assert sum("_point_en" in names for names in arrow_eval_udfs(df)) == n_page + 1
+
+
+def test_point_geo_pipeline_single_udf(spark, pages_dir):
+    """geo_pipeline's point mode derives and projects the point in the
+    one point_en UDF: one Python runner, not a centroid UDF chained
+    under a projection UDF."""
+    from fgcspark.pipeline import geo_pipeline
+
+    df = geo_pipeline(spark, pages_dir, geo="point", crs="euref")
+    assert arrow_eval_udfs(df) == [{"_point_en"}]
+
+
+def test_focal_density_reads_corpus_once(spark, pages_dir):
+    """focal_density carries each cell's own columns through its two
+    passes instead of joining back to its input, whose plan (scan and
+    point UDF) would then run twice."""
+    from fgcspark.pipeline import tile_counts
+    from fgcspark.tiles import focal_density
+
+    df = focal_density(tile_counts(spark, pages_dir, size_km=10))
+    assert arrow_eval_udfs(df) == [{"_point_en"}]
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan_of(df))) == 1
