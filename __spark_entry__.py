@@ -156,10 +156,7 @@ def _q_cell_ring_counts(spark, sf_dir):
     from fgcspark.cells.grid import ring_counts
     from fgcspark.pipeline import tile_counts
 
-    # eager localCheckpoint on the base aggregate: `hot` and the join
-    # side both read it — one extract scan, no cache-write overhead
-    # (see _q_hex_ring_counts for the measured comparison vs persist)
-    counts = tile_counts(spark, _geo_dir(sf_dir), size_km=10).localCheckpoint()
+    counts = tile_counts(spark, _geo_dir(sf_dir), size_km=10)
     hot = counts.orderBy(F.desc("n_docs"), F.asc("cell")).limit(20)
     return ring_counts(hot, counts, k=2)
 
@@ -541,15 +538,11 @@ def _q_hex_cell_counts(spark, sf_dir):
 def _q_hex_ring_counts(spark, sf_dir):
     """Hex gridDisk(k=2) aggregation over the 20 hottest 5 km hexes —
     19-cell neighborhood sums via literal-offset explode + broadcast
-    join (the base aggregate is computed once, never rescanned)."""
+    join (both branches read the base aggregate through one plan, so
+    exchange reuse serves it from one scan)."""
     from fgcspark.cells.hexgrid import hex_ring_counts
 
-    # eager localCheckpoint: `hot` and the join side share this
-    # aggregate — ONE extract-pipeline scan, and unlike persist() the
-    # downstream jobs read materialized partitions with no cache-write
-    # overhead (the cell_distinctive_terms/hotspots shape; measured
-    # 1.4-1.6 s vs 2.1-2.4 s persist, 1.9-6.5 s uncached at sf0.1)
-    counts = _q_hex_cell_counts(spark, sf_dir).localCheckpoint()
+    counts = _q_hex_cell_counts(spark, sf_dir)
     hot = counts.orderBy(F.desc("n_docs"), F.asc("hex_id")).limit(20)
     return hex_ring_counts(hot, counts, k=2)
 
@@ -1517,7 +1510,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       layer_area_perimeter, layer_hulls) — plus the new streamed_dedup
       and every query whose r5 code changed behavior (hash-keyed
       exact/incremental dedup, the four media ops over the new real
-      header blobs, the localCheckpoint ring counts).
+      header blobs, the then-checkpointed ring counts).
 
     Everything past slot 50 is still verified each round by the local gate
     (``scripts/check_contract.py`` runs ALL entries through the same

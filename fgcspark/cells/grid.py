@@ -95,7 +95,10 @@ def ring_counts(probes: DataFrame, counts: DataFrame, k: int = 2) -> DataFrame:
     `counts` is the full per-cell aggregate to sum neighbors from. The
     ring cells are derived by pure integer arithmetic (explode of a
     constant offset sequence, no UDF), then a broadcast of the exploded
-    probe rows joins the aggregate — the base table is never rescanned.
+    probe rows joins the aggregate. With `probes` derived from `counts`
+    both branches plan the aggregate identically (a cell_id key is
+    never NULL, so no isnotnull is inferred and pushed below one of
+    them), and exchange reuse serves it from one scan of the base table.
 
     Returns (cell, n_docs, n_docs_ring)."""
     nb = F.split(F.col("cell"), ":")[0].cast("long")

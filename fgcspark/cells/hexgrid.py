@@ -159,9 +159,16 @@ def hex_ring_counts(probes: DataFrame, counts: DataFrame, k: int = 2) -> DataFra
     SMALL (hex_id, n_docs) subset; `counts` is the full per-hex
     aggregate. The 1+3k(k+1) neighbor ids come from exploding a
     constant literal offset array (pure arithmetic, no UDF), and the
-    exploded probes are broadcast onto the aggregate — the base table
-    is never rescanned, and at 100 TB the only cost is one broadcast
-    of |probes| * (3k^2+3k+1) longs.
+    exploded probes are broadcast onto the aggregate; at 100 TB the
+    only cost past the aggregate is one broadcast of
+    |probes| * (3k^2+3k+1) longs.
+
+    When `probes` is derived from `counts` (the top-N hot hexes), both
+    branches plan the aggregate identically and adaptive exchange reuse
+    serves it from ONE scan of the base table. The null-safe join key
+    keeps it so: a plain equi-join pushes an inferred isnotnull(hex_id)
+    below the `counts` branch only. A NULL hex_id probe (rows with no
+    point) is filtered on the probe side, so it yields no row.
 
     Returns (hex_id, n_docs, n_docs_ring)."""
     q = (F.shiftright(F.col("hex_id"), 21) - F.lit(BIAS)).alias("_q")
@@ -180,10 +187,11 @@ def hex_ring_counts(probes: DataFrame, counts: DataFrame, k: int = 2) -> DataFra
             F.shiftleft(F.col("_q") + F.col("_o.dq") + F.lit(BIAS), 21)
             + (F.col("_r") + F.col("_o.dr") + F.lit(BIAS)),
         )
+        .where(F.col("_nid").isNotNull())
     )
     neigh = counts.select(F.col("hex_id").alias("_nid"), F.col("n_docs").alias("_nn"))
     return (
-        neigh.join(F.broadcast(exploded), "_nid")
+        neigh.join(F.broadcast(exploded), neigh["_nid"].eqNullSafe(exploded["_nid"]))
         .groupBy("hex_id", "n_docs")
         .agg(F.sum("_nn").alias("n_docs_ring"))
     )

@@ -17,16 +17,16 @@ to libm ulp and the 6-decimal rounding contract absorbs. This is the
 entity_range stance extended to second-order statistics.
 
 Scale shape (100 TB): one corpus-sized shuffle into the per-cell count
-(map-side combined), materialized ONCE with an eager localCheckpoint
-before fan-out — the statistic's 3-5 consumers (neighbor candidates,
-join probe, global moments) prune the aggregate differently, so
-without it Catalyst re-runs the corpus aggregation per consumer (the
-cell_distinctive_terms finding; measured 5 parquet scans for Gi*).
-The neighbor structure is an 8-offset explode of the AGGREGATED cell
-table equi-joined back on the packed long key (the shared
-cells/grid.py primitives — occupied-cells-sized, not corpus-sized);
-global moments are a broadcast 1-row aggregate of integer sums (the
-PageRank dangling-mass idiom). No windows, no driver loops, no Python.
+(map-side combined), then one neighbor aggregate over that occupied-cell
+table (_neighborhoods): each cell's 3x3 offsets, self included, are
+exploded onto the packed long key (the shared cells/grid.py primitives)
+and grouped there, so the window sums arrive with no join back. Gi*
+adds a broadcast 1-row aggregate of integer moments over the same
+counts (the PageRank dangling-mass idiom); both consumers keep the same
+aggregate functions, so their plans match and adaptive exchange reuse
+serves the count from ONE corpus scan with no checkpoint. Moran's I is a
+single aggregate over the neighbor table. No windows, no driver loops,
+no Python.
 """
 
 from __future__ import annotations
@@ -34,21 +34,53 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fgcspark.cells.grid import offsets_array_col, packed_from_id, packed_neighbor
+from fgcspark.cells.grid import (
+    QUEEN_OFFSETS,
+    offsets_array_col,
+    packed_from_id,
+    packed_neighbor,
+)
 
 
-def _cell_counts(points: DataFrame, cell_col: str) -> DataFrame:
-    """(cell, n_docs, _k packed key) for occupied cells only — the
-    statistical population is the set of occupied cells (documented:
-    empty cells are not zeros in the population, matching how the
-    tile raster itself is stored sparse). Materialized eagerly: one
-    corpus pass regardless of downstream consumer count."""
-    counts = (
-        points.groupBy(F.col(cell_col).alias("cell"))
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .select("cell", "n_docs", packed_from_id(F.col("cell")).alias("_k"))
+# the 3x3 window, self included: grouping every occupied cell's offsets
+# on the displaced key gives each cell its own window (queen
+# contiguity is symmetric)
+WINDOW = QUEEN_OFFSETS + [(0, 0)]
+
+
+def _moments(x) -> list:
+    """n, sum(x), sum(x^2) over the occupied cells — exact integers."""
+    return [
+        F.count(F.lit(1)).alias("__n"),
+        F.sum(x).alias("__sx"),
+        F.sum(x * x).alias("__sxx"),
+    ]
+
+
+def _neighborhoods(counts: DataFrame) -> DataFrame:
+    """(cell, n_docs, w, neighbor_sum) per occupied cell of the
+    (cell, n_docs) counts: w occupied cells in its 3x3 window (itself
+    included), neighbor_sum their summed counts. The statistical
+    population is the set of occupied cells (empty cells are not zeros
+    in the population, matching how the tile raster itself is stored
+    sparse). The cell's own columns ride on its zero-offset term
+    (the focal_density trick); a key that no occupied cell sits on has
+    none and is dropped, and so is the NULL key (an off-grid
+    displacement or a NULL cell id)."""
+    own = (F.col("_o.dn") == 0) & (F.col("_o.de") == 0)
+    key = packed_neighbor(packed_from_id(F.col("cell")), F.col("_o.dn"), F.col("_o.de"))
+    return (
+        counts.withColumn("_o", F.explode(offsets_array_col(WINDOW)))
+        .groupBy(key.alias("_k"))
+        .agg(
+            F.max(F.when(own, F.col("cell"))).alias("cell"),
+            F.max(F.when(own, F.col("n_docs"))).alias("n_docs"),
+            F.count(F.lit(1)).alias("w"),
+            F.sum("n_docs").alias("neighbor_sum"),
+        )
+        .where(F.col("cell").isNotNull())
+        .select("cell", "n_docs", "w", "neighbor_sum")
     )
-    return counts.localCheckpoint(eager=True)
 
 
 def getis_ord_oracle_sql(table_expr: str, cell_col: str = "cell_10km") -> str:
@@ -137,35 +169,10 @@ def getis_ord(
     the sqrt term is 0), or a constant raster (every occupied cell the
     same count, s = 0).
     """
-    cell_col = f"cell_{size_km}km"
-    counts = _cell_counts(points, cell_col)
-    # candidate neighbor keys -> equi-join back on the occupied table;
-    # union the self cell so weights are self-inclusive (Gi*, not Gi)
-    cand = (
-        counts.withColumn("_o", F.explode(offsets_array_col()))
-        .select(
-            F.col("_k").alias("_ki"),
-            packed_neighbor(
-                F.col("_k"), F.col("_o.dn"), F.col("_o.de")
-            ).alias("_kj"),
-        )
-        .unionByName(
-            counts.select(F.col("_k").alias("_ki"), F.col("_k").alias("_kj"))
-        )
+    counts = points.groupBy(F.col(f"cell_{size_km}km").alias("cell")).agg(
+        F.count(F.lit(1)).alias("n_docs")
     )
-    hood = (
-        cand.join(
-            counts.select(F.col("_k").alias("_kj"), F.col("n_docs").alias("_xj")),
-            "_kj",
-        )
-        .groupBy("_ki")
-        .agg(F.count(F.lit(1)).alias("w"), F.sum("_xj").alias("neighbor_sum"))
-    )
-    glob = counts.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.sum("n_docs").alias("__sx"),
-        F.sum(F.col("n_docs") * F.col("n_docs")).alias("__sxx"),
-    )
+    glob = counts.agg(*_moments(F.col("n_docs")))
     mean = F.col("__sx") / F.col("__n")
     s = F.sqrt(F.col("__sxx") / F.col("__n") - mean * mean)
     denom = s * F.sqrt(
@@ -180,7 +187,7 @@ def getis_ord(
         & (F.col("__sxx") * F.col("__n") > F.col("__sx") * F.col("__sx"))
     )
     return (
-        counts.join(hood, counts["_k"] == hood["_ki"])
+        _neighborhoods(counts)
         .crossJoin(F.broadcast(glob))
         .select(
             "cell",
@@ -217,36 +224,21 @@ def morans_i(
     float accumulation order anywhere. Returns
     (n_cells, w_pairs, morans_i).
     """
-    cell_col = f"cell_{size_km}km"
-    counts = _cell_counts(points, cell_col)
-    cand = counts.withColumn("_o", F.explode(offsets_array_col())).select(
-        F.col("_k").alias("_ki"),
-        F.col("n_docs").alias("_xi"),
-        packed_neighbor(F.col("_k"), F.col("_o.dn"), F.col("_o.de")).alias("_kj"),
+    counts = points.groupBy(F.col(f"cell_{size_km}km").alias("cell")).agg(
+        F.count(F.lit(1)).alias("n_docs")
     )
-    pairs = cand.join(
-        counts.select(F.col("_k").alias("_kj"), F.col("n_docs").alias("_xj")), "_kj"
-    )
-    pair_agg = pairs.agg(
-        F.count(F.lit(1)).alias("__w"),
-        F.sum(F.col("_xi") * F.col("_xj")).alias("__p"),
-        F.sum("_xi").alias("__s2"),
-    )
-    glob = counts.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.sum("n_docs").alias("__sx"),
-        F.sum(F.col("n_docs") * F.col("n_docs")).alias("__sxx"),
+    x, deg = F.col("n_docs"), F.col("w") - 1
+    g = _neighborhoods(counts).agg(
+        *_moments(x),
+        F.coalesce(F.sum(deg), F.lit(0)).alias("__w"),  # 0 pairs, not NULL, when empty
+        F.sum(x * (F.col("neighbor_sum") - x)).alias("__p"),
+        F.sum(deg * x).alias("__s2"),
     )
     m = F.col("__sx") / F.col("__n")
     num = F.col("__p") - F.lit(2.0) * m * F.col("__s2") + m * m * F.col("__w")
     den = F.col("__sxx") - F.col("__n") * m * m
-    return (
-        pair_agg.crossJoin(F.broadcast(glob))
-        .select(
-            F.col("__n").alias("n_cells"),
-            F.col("__w").alias("w_pairs"),
-            F.round((F.col("__n") / F.col("__w")) * num / den, round_to).alias(
-                "morans_i"
-            ),
-        )
+    return g.select(
+        F.col("__n").alias("n_cells"),
+        F.col("__w").alias("w_pairs"),
+        F.round((F.col("__n") / F.col("__w")) * num / den, round_to).alias("morans_i"),
     )

@@ -125,9 +125,12 @@ def focal_density(counts: DataFrame, weights=BINOMIAL) -> DataFrame:
     small shuffles over the per-cell aggregate (already orders of
     magnitude smaller than the doc table), never over the documents.
     Each occupied cell's own `cell`/`n_docs` ride through both passes
-    on its zero-offset term, so `counts` is read once: a join back to
-    it would re-run its whole plan (the point UDF is nondeterministic,
-    so Spark cannot reuse that exchange). Integer weights keep both
+    on its zero-offset term, so `counts` is read once with no join
+    back. A join back would re-run its whole plan: exchange reuse (which
+    does work across the point UDF) needs both branches to plan
+    `counts` identically, and a consumer that prunes the aggregate
+    differently, or a join that pushes an inferred isnotnull below
+    it, breaks the match. Integer weights keep both
     passes in exact long arithmetic, so the result is bit-identical to
     the direct 2-D sum regardless of association order.
 

@@ -424,25 +424,27 @@ def check_fusion(spark, d: str) -> dict:
 
 
 def check_hotspots(spark, d: str) -> dict:
-    """Getis-Ord Gi* at scale vs a DuckDB re-derivation over the truth
-    table (same integer-exact formulation as the contract oracle) —
-    exact set equality of (cell, n_docs, w, neighbor_sum, gi_star)."""
+    """Getis-Ord Gi* and Moran's I at scale vs DuckDB re-derivations
+    over the truth table (same integer-exact formulations as the
+    contract oracles) — exact set equality of (cell, n_docs, w,
+    neighbor_sum, gi_star) rows plus the (n_cells, w_pairs, morans_i)
+    row."""
     import duckdb
 
-    from fgcspark.hotspots import getis_ord
+    from fgcspark.hotspots import (
+        getis_ord,
+        getis_ord_oracle_sql,
+        morans_i,
+        morans_i_oracle_sql,
+    )
     from fgcspark.pipeline import pages_to_points
 
-    eng = {
-        (r.cell, r.n_docs, r.w, r.neighbor_sum, r.gi_star)
-        for r in getis_ord(pages_to_points(spark, d), size_km=10).collect()
-    }
-    from fgcspark.hotspots import getis_ord_oracle_sql
-
-    want = set(
-        duckdb.execute(
-            getis_ord_oracle_sql(f"read_parquet('{d}/truth.parquet')")
-        ).fetchall()
-    )
+    pts = pages_to_points(spark, d)
+    truth = f"read_parquet('{d}/truth.parquet')"
+    eng = {("gi", *r) for r in getis_ord(pts, size_km=10).collect()}
+    eng |= {("moran", *r) for r in morans_i(pts, size_km=10).collect()}
+    want = {("gi", *r) for r in duckdb.execute(getis_ord_oracle_sql(truth)).fetchall()}
+    want |= {("moran", *r) for r in duckdb.execute(morans_i_oracle_sql(truth)).fetchall()}
     return {"rows": len(eng | want), "mismatch": len(eng ^ want)}
 
 

@@ -112,3 +112,17 @@ def test_hex_ring_counts_small(spark):
     out = hx.hex_ring_counts(hot, counts, k=1).collect()
     assert len(out) == 1
     assert out[0]["n_docs"] == 3 and out[0]["n_docs_ring"] == 4
+
+    # the hottest "hex" is the NULL group of 5 point-less rows: it is
+    # a probe but yields no row, and the other probes keep their sums
+    nulls = spark.createDataFrame([(None, None)] * 5, "e double, n double")
+    counts = (
+        df.unionByName(nulls)
+        .select(hx.hex_id(F.col("e"), F.col("n"), s).alias("hex_id"))
+        .groupBy("hex_id")
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+    )
+    hot = counts.orderBy(F.desc("n_docs"), F.asc("hex_id")).limit(4)
+    assert hot.first()["hex_id"] is None
+    out = hx.hex_ring_counts(hot, counts, k=1).collect()
+    assert sorted((r["n_docs"], r["n_docs_ring"]) for r in out) == [(1, 1), (1, 4), (3, 4)]

@@ -164,28 +164,107 @@ def test_spatial_join_layer_built_on_executors(spark, pts, pages_dir):
         assert "BroadcastHashJoin" in plan and "LocalTableScan" not in plan
 
 
+def final_plan(df) -> str:
+    """The final adaptive plan of an executed df: the text before its
+    Initial Plan section. Exchange reuse happens at run time, so only
+    this text shows a ReusedExchange in place of a second scan."""
+    return df._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
+
+
 def test_ring_counts_single_source_scan(spark, pages_dir):
-    """The k-ring disk queries must scan the extract pipeline ONCE: the
-    per-cell aggregate is eagerly localCheckpoint-ed, so both the hot
-    probe selection and the neighbor join read the materialized RDD —
-    the downstream plan contains no parquet scan at all."""
+    """The k-ring disk queries scan their source ONCE with no
+    checkpoint: the hot probe selection and the neighbor join read the
+    per-cell aggregate through one plan, so its exchange is reused."""
+    from fgcspark.cells.grid import ring_counts
+    from fgcspark.cells.hexgrid import hex_id, hex_ring_counts
+
+    e = (F.length("html") % 50).cast("long")
+    for name, key, ring in (
+        ("cell", F.concat_ws(":", e, F.lit(0)), ring_counts),
+        ("hex_id", hex_id(e * 10000.0, F.lit(0.0), 5000.0), hex_ring_counts),
+    ):
+        counts = (
+            spark.read.parquet(f"{pages_dir}/pages.parquet")
+            .groupBy(key.alias(name))
+            .agg(F.count(F.lit(1)).alias("n_docs"))
+        )
+        hot = counts.orderBy(F.desc("n_docs"), F.asc(name)).limit(5)
+        out = ring(hot, counts, k=2)
+        assert out.collect()
+        plan = final_plan(out)
+        assert plan.count("FileScan parquet") == 1 and "ReusedExchange" in plan, name
+        assert "Scan ExistingRDD" not in plan
+
+
+def _gi(spark, pages_dir, pts):
+    from fgcspark.hotspots import getis_ord
+
+    return getis_ord(pts, 10)
+
+
+def _moran(spark, pages_dir, pts):
+    from fgcspark.hotspots import morans_i
+
+    return morans_i(pts, 10)
+
+
+def _hex_rings(spark, pages_dir, pts):
+    """The benchmark's hex-ring shape: top-20 hexes of a lazy count."""
     from fgcspark.cells.hexgrid import hex_id, hex_ring_counts
 
     counts = (
-        spark.read.parquet(f"{pages_dir}/pages.parquet")
-        .select(F.length("html").alias("_l"))
-        .select((F.col("_l") % 50).cast("long").alias("e"), F.lit(0.0).alias("n"))
-        .select(hex_id(F.col("e") * 10000.0, F.col("n"), 5000.0).alias("hex_id"))
+        pts.select(hex_id(F.col("e"), F.col("n"), 5000.0).alias("hex_id"))
         .groupBy("hex_id")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .localCheckpoint()
     )
-    hot = counts.orderBy(F.desc("n_docs"), F.asc("hex_id")).limit(5)
-    out = hex_ring_counts(hot, counts, k=2)
-    plan = plan_of(out)
-    assert "Scan parquet" not in plan and "FileScan" not in plan
-    assert "Scan ExistingRDD" in plan
-    assert out.count() > 0
+    hot = counts.orderBy(F.desc("n_docs"), F.asc("hex_id")).limit(20)
+    return hex_ring_counts(hot, counts, k=2)
+
+
+def _entry(name):
+    def build(spark, pages_dir, pts):
+        import __spark_entry__
+
+        return getattr(__spark_entry__, name)(spark, pages_dir)
+
+    return build
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_gi, _moran, _entry("_q_cell_ring_counts"), _entry("_q_hex_ring_counts")],
+    ids=["getis_ord", "morans_i", "cell_ring_counts", "hex_ring_counts"],
+)
+def test_spatial_aggregates_build_lazily(spark, pages_dir, pts, build):
+    """Building a one-shot spatial aggregate runs none of its plan: no
+    eager checkpoint fires while the plan is assembled. The only job
+    allowed is the parquet reader's schema inference (one stage named
+    after the `parquet` call)."""
+    sc = spark.sparkContext
+    bus, st = sc._jsc.sc().listenerBus(), sc.statusTracker()
+    bus.waitUntilEmpty(60_000)
+    before = set(st.getJobIdsForGroup())
+    build(spark, pages_dir, pts)
+    bus.waitUntilEmpty(60_000)
+    stages = [
+        [st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds]
+        for j in sorted(set(st.getJobIdsForGroup()) - before)
+    ]
+    assert all(len(n) == 1 and n[0].startswith("parquet at ") for n in stages), stages
+
+
+@pytest.mark.parametrize(
+    "build", [_gi, _moran, _hex_rings], ids=["getis_ord", "morans_i", "hex_ring_counts"]
+)
+def test_spatial_aggregates_scan_once(spark, pages_dir, pts, build):
+    """One corpus pass per aggregate: after execution the final plan
+    holds ONE parquet scan and ONE point UDF, every other consumer of
+    the per-cell count reading it through a reused exchange."""
+    df = build(spark, pages_dir, pts)
+    df.collect()
+    plan = final_plan(df)
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def arrow_eval_udfs(df) -> list[set[str]]:
