@@ -25,12 +25,12 @@ golden and scripts/validate_at_scale.py):
 
 Physical plan: joins/pip.py's one spatial-join plan, with a footprint
 probe:
-1. one Arrow-batched pandas UDF parses + projects each footprint ONCE
-   (one TM35FIN transform call per Arrow batch; the UDF is marked
-   nondeterministic so Catalyst cannot evaluate it a second time below
-   the join's null filters) and emits its geometry (nested part arrays
-   for the default expression refine; WKB for the numpy refine) + bbox,
-   so downstream stages never re-parse;
+1. one Arrow UDF parses + projects each footprint ONCE (one TM35FIN
+   transform call per Arrow batch; the UDF is marked nondeterministic
+   so Catalyst cannot evaluate it a second time below the join's null
+   filters) and emits its parts — per part the vertex list, the
+   segment list and an areal flag, assembled from numpy offsets — plus
+   its bbox, so downstream stages never re-parse;
 2. the probe's bbox cell cover is exploded JVM-side with
    sequence()/explode (footprints are small, the cover is a handful of
    cells at the prefilter grid);
@@ -38,50 +38,45 @@ probe:
    with no join hint: Spark broadcasts the layer while it is under the
    broadcast threshold (the probe streams with no shuffle) and
    sort-merge joins above it;
-4. the exact intersects refine: by default nested JVM higher-order
-   lambdas over the part/edge arrays (no Python after stage 1);
-   optionally the WKB + numpy pandas UDF. Duplicate (footprint,
-   polygon) candidates from multi-cell overlap are deduped WITHOUT a
-   shuffle: a candidate is emitted only from its reporting cell — the
-   cell containing the lower-left corner of the bbox intersection,
-   which both covers are guaranteed to contain. The per-pair predicate
-   is heavier than pip_join's, so the default prefilter grid is finer
-   (10 km vs 50 km): a larger cover buys proportionally fewer
-   candidate pairs.
+4. the exact intersects refine: one boolean Arrow UDF (_fp_refine)
+   that flattens a whole batch of candidates' part, edge and vertex
+   lists by their offsets and runs geom_intersects_rings's three tests
+   as numpy steps over (candidate, item, edge) terms. Duplicate
+   (footprint, polygon) candidates from multi-cell overlap are deduped
+   WITHOUT a shuffle: a candidate is emitted only from its reporting
+   cell — the cell containing the lower-left corner of the bbox
+   intersection, which both covers are guaranteed to contain. The
+   per-pair predicate is heavier than pip_join's, so the default
+   prefilter grid is finer (10 km vs 50 km): a larger cover buys
+   proportionally fewer candidate pairs.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from fgcspark.crs import tm35fin as tm
 from fgcspark.geom.kernels import transform_batch
-from fgcspark.geom.wkb import from_wkb, to_wkb
-from fgcspark.geom.wkt import _KNOWN, GEOMETRYCOLLECTION, POLYGON, Geom, parse_wkt
+from fgcspark.geom.wkt import Geom, parse_wkt
 from fgcspark.joins.pip import (
     EDGE,
     VERT,
+    _crosses,
     _pip_mask,
     _ring_segs,
     bbox_cells,
-    build_polygon_index,
-    crossing_parity,
     polygon_cover,
 )
 
-
-def _known_tags(g: Geom) -> Geom:
-    """Unknown tags (TRIANGLE) carry POLYGON-shaped nesting and join
-    like polygons; rename them POLYGON, collection members included, so
-    WKB can serialize them. Coordinates are shared, not copied."""
-    if g.gtype == GEOMETRYCOLLECTION:
-        return Geom(g.gtype, [_known_tags(m) for m in g.coords])
-    return g if g.gtype in _KNOWN else Geom(POLYGON, g.coords)
+# (candidate, item, edge) terms the refine evaluates per numpy step:
+# bounds its working memory (~150 bytes a term, ~5 MiB a slice) on
+# edge-heavy layers; larger slices measured no faster
+_SLICE_TERMS = 1 << 15
 
 
 def _flatten_parts(g: Geom, out: list) -> None:
@@ -110,15 +105,11 @@ def _flatten_parts(g: Geom, out: list) -> None:
         out.append(("poly", [np.asarray(r, float).reshape(-1, 2) for r in c]))
 
 
-def _segs_any_intersect(A: np.ndarray, B: np.ndarray) -> bool:
-    """True when any segment of A crosses or touches any segment of B.
-    Orientation straddle for proper crossings; a zero orientation with
-    the endpoint inside the other segment's bbox catches touches and
-    collinear overlap. All pairs at once (broadcast (n,m))."""
-    if len(A) == 0 or len(B) == 0:
-        return False
-    ax1, ay1, ax2, ay2 = (A[:, i][:, None] for i in range(4))
-    bx1, by1, bx2, by2 = (B[:, i][None, :] for i in range(4))
+def _seg_hits(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
+    """Elementwise (broadcasting): segment a crosses or touches segment
+    b. Orientation straddle for proper crossings; a zero orientation
+    with the endpoint inside the other segment's bbox catches touches
+    and collinear overlap."""
 
     def cross(ox, oy, px, py, qx, qy):
         return (px - ox) * (qy - oy) - (py - oy) * (qx - ox)
@@ -130,8 +121,6 @@ def _segs_any_intersect(A: np.ndarray, B: np.ndarray) -> bool:
     proper = (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0))) & (
         ((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))
     )
-    if proper.any():
-        return True
 
     def on(px, py, sx1, sy1, sx2, sy2, d):
         return (
@@ -142,13 +131,22 @@ def _segs_any_intersect(A: np.ndarray, B: np.ndarray) -> bool:
             & (py <= np.maximum(sy1, sy2))
         )
 
-    touch = (
+    return proper | (
         on(ax1, ay1, bx1, by1, bx2, by2, d1)
         | on(ax2, ay2, bx1, by1, bx2, by2, d2)
         | on(bx1, by1, ax1, ay1, ax2, ay2, d3)
         | on(bx2, by2, ax1, ay1, ax2, ay2, d4)
     )
-    return bool(touch.any())
+
+
+def _segs_any_intersect(A: np.ndarray, B: np.ndarray) -> bool:
+    """True when any segment of A crosses or touches any segment of B
+    (segments as (m,4) = x1 y1 x2 y2; all pairs at once)."""
+    if len(A) == 0 or len(B) == 0:
+        return False
+    a = (A[:, i][:, None] for i in range(4))
+    b = (B[:, i][None, :] for i in range(4))
+    return bool(_seg_hits(*a, *b).any())
 
 
 def _in_rings(pts: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
@@ -161,7 +159,8 @@ def _in_rings(pts: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
 
 def geom_intersects_rings(parts: list, rings: list[np.ndarray]) -> bool:
     """Exact intersects test: flattened footprint parts vs one layer
-    polygon's ring set (even-odd interiors)."""
+    polygon's ring set (even-odd interiors). The scalar reference of
+    the batched _fp_refine."""
     poly_segs = np.concatenate([_ring_segs(r, closed=True) for r in rings])
     poly_verts = np.concatenate([np.asarray(r, float) for r in rings])
     for kind, arr in parts:
@@ -185,21 +184,9 @@ def geom_intersects_rings(parts: list, rings: list[np.ndarray]) -> bool:
     return False
 
 
-_FP_SCHEMA = T.StructType(
-    [
-        T.StructField("wkb", T.BinaryType()),
-        T.StructField("x0", T.DoubleType()),
-        T.StructField("y0", T.DoubleType()),
-        T.StructField("x1", T.DoubleType()),
-        T.StructField("y1", T.DoubleType()),
-    ]
-)
-
-# nested parts for the JVM-expression refine: one struct per primitive
-# part — its vertices (containment probes), its segments (crossing
-# tests), and whether it is areal (enables the reverse-containment
-# test). Built once in the project UDF; every downstream predicate is
-# a JVM higher-order lambda over these arrays.
+# one struct per primitive part: its vertices (containment probes), its
+# segments (crossing tests), and whether it is areal (enables the
+# reverse-containment test)
 _PART = T.StructType(
     [
         T.StructField("areal", T.BooleanType()),
@@ -218,44 +205,17 @@ _FP_PARTS_SCHEMA = T.StructType(
 )
 
 
-def _parts_rows(parts: list) -> list:
-    """_flatten_parts output -> rows for the _PART array column."""
-    out = []
-    for kind, arr in parts:
-        if kind == "pt":
-            verts = np.asarray(arr, float).reshape(-1, 2)
-            segs = np.empty((0, 4))
-            areal = False
-        elif kind == "line":
-            verts = np.asarray(arr, float).reshape(-1, 2)
-            segs = _ring_segs(verts, closed=False)
-            areal = False
-        else:  # poly: arr is a ring list
-            verts = np.concatenate([np.asarray(r, float) for r in arr])
-            segs = np.concatenate([_ring_segs(r, closed=True) for r in arr])
-            areal = True
-        out.append(
-            (
-                areal,
-                [(float(x), float(y)) for x, y in verts],
-                [tuple(map(float, s)) for s in segs],
-            )
-        )
-    return out
-
-
-def _join_geoms(fp: pd.Series, lon: pd.Series, lat: pd.Series):
-    """(row index, projected geometry, its parts, bbox) for every row
-    with a join geometry. G4 substitution: a NULL/POINT/EMPTY footprint
-    with coordinates joins as the point; rows with neither a parseable
-    footprint nor coordinates are skipped. The batch's geometries are
-    projected to EPSG:3067 with one transform_batch call."""
-    lon_v = lon.to_numpy(dtype=float, na_value=np.nan)
-    lat_v = lat.to_numpy(dtype=float, na_value=np.nan)
+def _join_geoms(fp: pa.Array, lon: pa.Array, lat: pa.Array):
+    """(row index, flattened parts) for every row with a join geometry.
+    G4 substitution: a NULL/POINT/EMPTY footprint with coordinates
+    joins as the point; rows with neither a parseable footprint nor
+    coordinates are skipped. The batch's geometries are projected to
+    EPSG:3067 with one transform_batch call."""
+    lon_v = lon.to_numpy(zero_copy_only=False)
+    lat_v = lat.to_numpy(zero_copy_only=False)
     rows: list[int] = []
     geoms: list[Geom] = []
-    for i in range(len(fp)):
-        w = fp.iloc[i]
+    for i, w in enumerate(fp.to_pylist()):
         substitute = w is None or w.startswith("POINT") or "EMPTY" in w
         if substitute and np.isfinite(lon_v[i]) and np.isfinite(lat_v[i]):
             g = Geom("POINT", np.array([lon_v[i], lat_v[i]]))
@@ -269,94 +229,160 @@ def _join_geoms(fp: pd.Series, lon: pd.Series, lat: pd.Series):
         rows.append(i)
         geoms.append(g)
     for i, p in zip(rows, transform_batch(geoms, tm.geodetic_to_tm35)):
-        p = _known_tags(p)
         parts: list = []
         _flatten_parts(p, parts)
         if parts:
-            yield i, p, parts, _parts_bbox(parts)
+            yield i, parts
 
 
-@pandas_udf(_FP_PARTS_SCHEMA)
-def _fp_project_parts(fp: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
+def _offsets(lengths) -> pa.Array:
+    off = np.zeros(len(lengths) + 1, dtype=np.int32)
+    np.cumsum(lengths, out=off[1:])
+    return pa.array(off)
+
+
+def _struct_list(chunks: list[np.ndarray], t: T.StructType) -> pa.ListArray:
+    """One list entry per (k, len(t.names)) chunk, as a list<t> array."""
+    flat = np.concatenate(chunks) if chunks else np.empty((0, len(t.names)))
+    cols = [pa.array(np.ascontiguousarray(flat[:, k])) for k in range(len(t.names))]
+    return pa.ListArray.from_arrays(
+        _offsets([len(c) for c in chunks]), pa.StructArray.from_arrays(cols, t.names)
+    )
+
+
+def _parts_array(rows: list) -> pa.StructArray:
+    """Flattened parts per row (None: no join geometry) -> the
+    _FP_PARTS_SCHEMA array (parts, bbox), NULL where a row has none.
+    The part, vertex and segment lists are built from numpy arrays and
+    their offsets."""
+    n_parts = np.array([len(p) if p else 0 for p in rows], dtype=np.int64)
+    null = n_parts == 0
+    box = np.full((4, len(rows)), np.nan)
+    areal, verts, segs = [], [], []
+    for i, parts in enumerate(rows):
+        for kind, arr in parts or ():
+            if kind == "poly":
+                verts.append(np.concatenate(arr))
+                segs.append(np.concatenate([_ring_segs(r, closed=True) for r in arr]))
+            else:
+                verts.append(arr)
+                segs.append(_ring_segs(arr, closed=False) if kind == "line" else np.empty((0, 4)))
+            areal.append(kind == "poly")
+        if parts:
+            allv = np.concatenate(verts[-len(parts):])
+            box[:2, i] = allv.min(axis=0)
+            box[2:, i] = allv.max(axis=0)
+    part = pa.StructArray.from_arrays(
+        [pa.array(areal, pa.bool_()), _struct_list(verts, VERT), _struct_list(segs, EDGE)],
+        _PART.names,
+    )
+    cols = [pa.ListArray.from_arrays(_offsets(n_parts), part, mask=pa.array(null))]
+    cols += [pa.array(b, mask=null) for b in box]
+    return pa.StructArray.from_arrays(cols, _FP_PARTS_SCHEMA.names)
+
+
+@arrow_udf(_FP_PARTS_SCHEMA)
+def _fp_project_parts(fp: pa.Array, lon: pa.Array, lat: pa.Array) -> pa.Array:
     """Parse + project each row's join geometry once -> (parts, bbox)."""
-    n = len(fp)
-    rows: list = [None] * n
-    bb = np.full((n, 4), np.nan)
-    for i, _, parts, box in _join_geoms(fp, lon, lat):
-        rows[i] = _parts_rows(parts)
-        bb[i] = box
-    return pd.DataFrame(
-        {"parts": rows, "x0": bb[:, 0], "y0": bb[:, 1], "x1": bb[:, 2], "y1": bb[:, 3]}
-    )
-
-
-@pandas_udf(_FP_SCHEMA)
-def _fp_project_wkb(fp: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-    """Parse + project each row's join geometry once -> (wkb, bbox)."""
-    n = len(fp)
-    wkbs: list = [None] * n
-    bb = np.full((n, 4), np.nan)
-    for i, p, _, box in _join_geoms(fp, lon, lat):
-        wkbs[i] = to_wkb(p)
-        bb[i] = box
-    return pd.DataFrame(
-        {"wkb": wkbs, "x0": bb[:, 0], "y0": bb[:, 1], "x1": bb[:, 2], "y1": bb[:, 3]}
-    )
+    rows: list = [None] * len(fp)
+    for i, parts in _join_geoms(fp, lon, lat):
+        rows[i] = parts
+    return _parts_array(rows)
 
 
 # Nondeterministic for the reason given at pipeline.point_en: otherwise
 # the probe's null filters are pushed below the projection and every
 # row is parsed and projected twice, by two Python runners.
 fp_project_parts = _fp_project_parts.asNondeterministic()
-fp_project_wkb = _fp_project_wkb.asNondeterministic()
 
 
-def _x_cross(ox, oy, px, py, qx, qy):
-    """Column twin of _segs_any_intersect's orientation cross product
-    (same operation order -> bit-identical doubles)."""
-    return (px - ox) * (qy - oy) - (py - oy) * (qx - ox)
+def _flat(lists: pa.Array, names: list[str]):
+    """A list<struct> array, sliced or not -> (offsets from 0, the
+    struct values' fields as numpy arrays). Entry i is rows
+    offsets[i]:offsets[i+1] of the fields."""
+    off = lists.offsets.to_numpy()
+    vals = lists.values.slice(off[0], off[-1] - off[0])
+    return off - off[0], [vals.field(k).to_numpy(zero_copy_only=False) for k in names]
 
 
-def _x_seg_int(a, b):
-    """Column twin of one (segA, segB) pair of _segs_any_intersect:
-    proper straddle OR zero-orientation endpoint-in-bbox touch."""
-    d1 = _x_cross(b["x1"], b["y1"], b["x2"], b["y2"], a["x1"], a["y1"])
-    d2 = _x_cross(b["x1"], b["y1"], b["x2"], b["y2"], a["x2"], a["y2"])
-    d3 = _x_cross(a["x1"], a["y1"], a["x2"], a["y2"], b["x1"], b["y1"])
-    d4 = _x_cross(a["x1"], a["y1"], a["x2"], a["y2"], b["x2"], b["y2"])
-    proper = (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0))) & (
-        ((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))
-    )
-
-    def on(px, py, sx1, sy1, sx2, sy2, d):
-        return (
-            (d == F.lit(0.0))
-            & (px >= F.least(sx1, sx2))
-            & (px <= F.greatest(sx1, sx2))
-            & (py >= F.least(sy1, sy2))
-            & (py <= F.greatest(sy1, sy2))
-        )
-
-    touch = (
-        on(a["x1"], a["y1"], b["x1"], b["y1"], b["x2"], b["y2"], d1)
-        | on(a["x2"], a["y2"], b["x1"], b["y1"], b["x2"], b["y2"], d2)
-        | on(b["x1"], b["y1"], a["x1"], a["y1"], a["x2"], a["y2"], d3)
-        | on(b["x2"], b["y2"], a["x1"], a["y1"], a["x2"], a["y2"], d4)
-    )
-    return proper | touch
+def _terms(ln: np.ndarray, rn: np.ndarray):
+    """Every (g, i, j) with i < ln[g] and j < rn[g], as three index
+    arrays, in slices of about _SLICE_TERMS terms. A slice holds whole
+    (g, i) rows, so a row longer than that is a slice of its own."""
+    g = np.repeat(np.arange(len(ln)), ln)
+    i = np.arange(len(g)) - np.repeat(np.cumsum(ln) - ln, ln)
+    w = rn[g]
+    end = np.cumsum(w)
+    start = end - w
+    cuts = np.searchsorted(end, np.arange(0, end[-1] if len(end) else 0, _SLICE_TERMS), side="right")
+    for a, b in zip(cuts, [*cuts[1:], len(g)]):
+        if a < b:
+            row = np.repeat(np.arange(a, b), w[a:b])
+            yield g[row], i[row], np.arange(len(row)) + start[a] - start[row]
 
 
-def _parts_bbox(parts: list) -> tuple[float, float, float, float]:
-    arrs = []
-    for kind, arr in parts:
-        arrs.extend(arr if kind == "poly" else [arr])
-    allv = np.concatenate(arrs)
-    return (
-        float(allv[:, 0].min()),
-        float(allv[:, 1].min()),
-        float(allv[:, 0].max()),
-        float(allv[:, 1].max()),
-    )
+def _any_inside(l0, ln, pts, r0, rn, segs) -> np.ndarray:
+    """Per group g: does any point pts[l0[g] + i], i < ln[g], have odd
+    crossing parity against the segments segs[r0[g] + j], j < rn[g]?
+    pip._crosses is crossing_parity's formula, operation for operation."""
+    key0 = np.cumsum(ln) - ln  # first (group, point) key of each group
+    crossings = np.zeros(int(ln.sum()), dtype=np.int64)
+    for g, i, j in _terms(ln, rn):
+        p, s = l0[g] + i, r0[g] + j
+        c = _crosses(pts[0][p], pts[1][p], *(a[s] for a in segs))
+        # a slice's keys ascend: count over their range only
+        key = key0[g] + i
+        lo, hi = key[0], key[-1] + 1
+        crossings[lo:hi] += np.bincount(key[c] - lo, minlength=hi - lo)
+    out = np.zeros(len(ln), dtype=bool)
+    out[np.repeat(np.arange(len(ln)), ln)[crossings % 2 == 1]] = True
+    return out
+
+
+def _any_crossing(l0, ln, a_segs, r0, rn, b_segs) -> np.ndarray:
+    """Per group g: does any segment a_segs[l0[g] + i] cross or touch
+    any b_segs[r0[g] + j] (i < ln[g], j < rn[g])?"""
+    out = np.zeros(len(ln), dtype=bool)
+    for g, i, j in _terms(ln, rn):
+        a, b = l0[g] + i, r0[g] + j
+        out[g[_seg_hits(*(c[a] for c in a_segs), *(c[b] for c in b_segs))]] = True
+    return out
+
+
+@arrow_udf(T.BooleanType())
+def _fp_refine(parts: pa.Array, edges: pa.Array, verts: pa.Array) -> pa.Array:
+    """Exact intersects of each candidate's footprint parts with its
+    layer polygon's edges/vertices: geom_intersects_rings's three
+    tests, each one numpy step over the whole batch. A test runs only
+    for the candidates the earlier ones left undecided."""
+    n = len(parts)
+    if n == 0:
+        return pa.array([], pa.bool_())
+    p_off = parts.offsets.to_numpy()
+    part = parts.values.slice(p_off[0], p_off[-1] - p_off[0])
+    p_off = p_off - p_off[0]
+    areal = part.field("areal").to_numpy(zero_copy_only=False)
+    v_off, fp_v = _flat(part.field("verts"), VERT.names)
+    s_off, fp_s = _flat(part.field("segs"), EDGE.names)
+    e_off, edge = _flat(edges, EDGE.names)
+    w_off, poly_v = _flat(verts, VERT.names)
+    e0, en = e_off[:-1], np.diff(e_off)
+    # a candidate's vertices/segments over all its parts are contiguous
+    v0, s0 = v_off[p_off[:-1]], s_off[p_off[:-1]]
+    vn, sn = v_off[p_off[1:]] - v0, s_off[p_off[1:]] - s0
+
+    # 1. a footprint vertex inside the polygon
+    hit = _any_inside(v0, vn, fp_v, e0, en, edge)
+    # 2. a footprint segment crossing or touching a polygon edge
+    r = np.flatnonzero(~hit)
+    hit[r[_any_crossing(s0[r], sn[r], fp_s, e0[r], en[r], edge)]] = True
+    # 3. a polygon vertex inside an areal footprint part
+    row = np.repeat(np.arange(n), np.diff(p_off))
+    q = np.flatnonzero(areal & ~hit[row])
+    r = row[q]
+    inside = _any_inside(w_off[r], np.diff(w_off)[r], poly_v, s_off[q], np.diff(s_off)[q], fp_s)
+    hit[r[inside]] = True
+    return pa.array(hit)
 
 
 def footprint_join(
@@ -374,33 +400,28 @@ def footprint_join(
     intersects the layer polygon. `pages` carries the raw footprint WKT
     plus lon/lat doubles (fgcspark.extract.with_extracted output).
 
-    refine="expr" (default) runs the exact intersects predicate as
-    nested JVM higher-order lambdas over the footprint's part arrays
-    and the cover's edge/vertex arrays — after the parse/project UDF,
-    which runs once per row, no Python touches the hot path (the plan
-    has one ArrowEvalPython node). refine="pandas"
-    parses the footprint to WKB instead and runs the numpy predicate
-    against a driver-broadcast ring table. Both evaluate identical
-    float predicates in identical operation order — bit-identical
-    outputs (asserted by test_joins.py). Measured as for pip_join
-    (local[4], sf0.01 pages, densified synthetic layer, three calls),
-    expr vs pandas: median 10 vertices per polygon 4.3-7.0 s vs
-    4.7-6.5 s; median 100 vertices 6.8-7.6 s vs 4.7-5.1 s — the
-    segment-pair lambda is O(footprint segments x polygon edges), so
-    numpy wins on edge-heavy layers."""
+    The plan has two Arrow UDFs: the probe's parse/project, evaluated
+    once per row, and the batched numpy refine above the join.
+    `refine` is accepted for compatibility and ignored ("expr" and
+    "pandas" named the two refines this one replaced: nested JVM
+    lambdas and a per-pair numpy UDF); any other value raises
+    ValueError. Measured on local[4] (4 vCPU) over the sf0.01 pages
+    (23,584 candidate pairs), calls two and three of three collecting
+    calls (the first starts the Python workers): the layer as
+    generated (median 10 vertices per polygon) 3.5-3.6 s, against
+    4.7-5.0 s for the JVM lambdas and 6.7-6.8 s for the per-pair numpy
+    refine; densified to a median 100 vertices, 4.4-5.5 s against
+    6.9-8.3 s and 6.9-7.3 s."""
     if refine not in ("expr", "pandas"):
         raise ValueError(f"unknown refine backend {refine!r}")
-    project, geom = (
-        (fp_project_parts, "parts") if refine == "expr" else (fp_project_wkb, "wkb")
-    )
     s = cell_km * 1000
     probe = (
         pages.select(
             key_col,
-            project(F.col(fp_col), F.col(lon_col), F.col(lat_col)).alias("_g"),
+            fp_project_parts(F.col(fp_col), F.col(lon_col), F.col(lat_col)).alias("_g"),
         )
         .select(key_col, "_g.*")
-        .where(F.col(geom).isNotNull())
+        .where(F.col("parts").isNotNull())
     )
     cand = (
         bbox_cells(probe, cell_km, "x0", "y0", "x1", "y1")
@@ -419,38 +440,5 @@ def footprint_join(
             & (F.col("y0") <= F.col("by1")) & (F.col("y1") >= F.col("by0"))
         )
     )
-
-    if refine == "expr":
-        hit = F.exists(
-            "parts",
-            lambda part: (
-                F.exists(part["verts"], lambda v: crossing_parity(v, F.col("edges")))
-                | F.exists(
-                    part["segs"],
-                    lambda sg: F.exists(F.col("edges"), lambda ed: _x_seg_int(sg, ed)),
-                )
-                | (
-                    part["areal"]
-                    & F.exists(F.col("verts"), lambda v: crossing_parity(v, part["segs"]))
-                )
-            ),
-        )
-        return cand.where(hit).select(key_col, "poly_id")
-
-    bc = spark.sparkContext.broadcast(build_polygon_index(spark, polygons, cell_km).ring_table())
-
-    @pandas_udf(T.BooleanType())
-    def refine_udf(wkb: pd.Series, pid: pd.Series) -> pd.Series:
-        table = bc.value
-        out = np.zeros(len(pid), dtype=bool)
-        cache: dict[bytes, list] = {}
-        for i, (key, p) in enumerate(zip(wkb, pid)):
-            parts = cache.get(key)
-            if parts is None:
-                parts = []
-                _flatten_parts(from_wkb(key), parts)
-                cache[key] = parts
-            out[i] = geom_intersects_rings(parts, table[int(p)])
-        return pd.Series(out)
-
-    return cand.filter(refine_udf(F.col("wkb"), F.col("poly_id"))).select(key_col, "poly_id")
+    refined = cand.where(_fp_refine(F.col("parts"), F.col("edges"), F.col("verts")))
+    return refined.select(key_col, "poly_id")

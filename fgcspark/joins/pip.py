@@ -6,7 +6,8 @@ R/finbif_geo_convert.R:83); this operator is the graft requirement
 EPSG:3067) against a polygon layer.
 
 One physical plan, shared by pip_join, pip_anti_join and
-joins/fpjoin.footprint_join:
+joins/fpjoin.footprint_join (which swaps in its own footprint probe and
+refine, see there):
 1. polygon_cover builds the layer on the executors: one mapInPandas
    parses and projects each polygon and emits one row per polygon
    (poly_id, flat edge array, vertex array, bbox); the bbox cell cover
@@ -19,7 +20,9 @@ joins/fpjoin.footprint_join:
    care of hot cells. A caller forces the shuffle strategy by hinting
    its own probe input (``points.hint("merge")``);
 3. the exact even-odd crossing-number refine runs as a JVM
-   higher-order lambda over the polygon's edge array (crossing_parity).
+   higher-order lambda over the polygon's edge array (crossing_parity);
+   the footprint join's refine is a batched numpy Arrow UDF instead,
+   with the same crossing formula (_crosses).
 
 refine="pandas" swaps step 3 for an Arrow-batched numpy kernel over a
 driver-broadcast ring table (build_polygon_index). See pip_join for
@@ -205,11 +208,18 @@ def _pip_mask(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
         x1 = np.roll(x0, -1)
         y1 = np.roll(y0, -1)
     # edges (k,), points (m,): broadcast (m,k)
-    cond = (y0[None, :] > py[:, None]) != (y1[None, :] > py[:, None])
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = (x1 - x0)[None, :] * (py[:, None] - y0[None, :]) / (y1 - y0)[None, :] + x0[None, :]
-    crossing = cond & (px[:, None] < xint)
+    crossing = _crosses(px[:, None], py[:, None], x0[None, :], y0[None, :], x1[None, :], y1[None, :])
     return crossing.sum(axis=1) % 2 == 1
+
+
+def _crosses(px, py, x1, y1, x2, y2):
+    """Elementwise (broadcasting): the rightward ray from (px, py)
+    crosses the edge (x1, y1)-(x2, y2). The crossing formula is
+    crossing_parity's, in the same IEEE-double operation order."""
+    cond = (y1 > py) != (y2 > py)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
+    return cond & (px < xint)
 
 
 def crossing_parity(v, edges):

@@ -215,29 +215,90 @@ def _sq(x0, y0, x1, y1):
     return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]], float)
 
 
+_HOLED = [_sq(0, 0, 10, 10), _sq(4, 4, 6, 6)]  # square with a hole
+# (footprint parts, intersects _HOLED)
+_INTERSECTS_CASES = [
+    # point inside / in hole / outside
+    ([("pt", np.array([[1.0, 1.0]]))], True),
+    ([("pt", np.array([[5.0, 5.0]]))], False),  # hole interior
+    ([("pt", np.array([[20.0, 1.0]]))], False),
+    # line crossing the boundary; line wholly inside; line in the hole
+    ([("line", np.array([[-2.0, 5.0], [2.0, 5.0]]))], True),
+    ([("line", np.array([[1.0, 1.0], [2.0, 2.0]]))], True),
+    ([("line", np.array([[4.5, 5.0], [5.5, 5.0]]))], False),
+    # line T-touching the boundary from outside; collinear overlap
+    # with the bottom edge; collinear with it but disjoint
+    ([("line", np.array([[-2.0, 5.0], [0.0, 5.0]]))], True),
+    ([("line", np.array([[-2.0, 0.0], [3.0, 0.0]]))], True),
+    ([("line", np.array([[-5.0, 0.0], [-1.0, 0.0]]))], False),
+    # polygon crossing; polygon containing the layer polygon; contained
+    ([("poly", [_sq(8, 8, 12, 12)])], True),
+    ([("poly", [_sq(-5, -5, 15, 15)])], True),
+    ([("poly", [_sq(1, 1, 2, 2)])], True),
+    # polygon entirely within the hole; disjoint polygon
+    ([("poly", [_sq(4.5, 4.5, 5.5, 5.5)])], False),
+    ([("poly", [_sq(20, 20, 30, 30)])], False),
+    # footprint polygon around the hole that crosses the hole ring: its
+    # vertices are in the annulus
+    ([("poly", [_sq(3, 3, 7, 7)])], True),
+    # several parts: only the point-only part meets the polygon
+    ([("pt", np.array([[20.0, 1.0], [1.0, 1.0]])), ("line", np.array([[30.0, 30.0], [40.0, 40.0]]))], True),
+    ([("pt", np.array([[20.0, 1.0]])), ("poly", [_sq(20, 20, 30, 30)])], False),
+    # only the segment test decides these: a line and a band across the
+    # square with every vertex of both outside the other
+    ([("line", np.array([[-2.0, 1.0], [12.0, 1.0]]))], True),
+    ([("poly", [_sq(-2, 1, 12, 2)])], True),
+]
+
+
 def test_geom_intersects_rings_cases():
     from fgcspark.joins.fpjoin import geom_intersects_rings as gi
 
-    poly = [_sq(0, 0, 10, 10), _sq(4, 4, 6, 6)]  # square with a hole
-    # point inside / in hole / outside
-    assert gi([("pt", np.array([[1.0, 1.0]]))], poly)
-    assert not gi([("pt", np.array([[5.0, 5.0]]))], poly)  # hole interior
-    assert not gi([("pt", np.array([[20.0, 1.0]]))], poly)
-    # line crossing the boundary; line wholly inside; line in the hole
-    assert gi([("line", np.array([[-2.0, 5.0], [2.0, 5.0]]))], poly)
-    assert gi([("line", np.array([[1.0, 1.0], [2.0, 2.0]]))], poly)
-    assert not gi([("line", np.array([[4.5, 5.0], [5.5, 5.0]]))], poly)
-    # polygon crossing; polygon containing the layer polygon; contained
-    assert gi([("poly", [_sq(8, 8, 12, 12)])], poly)
-    assert gi([("poly", [_sq(-5, -5, 15, 15)])], poly)
-    assert gi([("poly", [_sq(1, 1, 2, 2)])], poly)
-    # polygon entirely within the hole; disjoint polygon
-    assert not gi([("poly", [_sq(4.5, 4.5, 5.5, 5.5)])], poly)
-    assert not gi([("poly", [_sq(20, 20, 30, 30)])], poly)
-    # footprint polygon that contains the hole ring but crosses nothing:
-    # its vertices are in the hole (outside), yet the ring area between
-    # hole and its own boundary... pick one overlapping the annulus
-    assert gi([("poly", [_sq(3, 3, 7, 7)])], poly)
+    for parts, want in _INTERSECTS_CASES:
+        assert gi(parts, _HOLED) == want, parts
+
+
+def _random_refine_rows(n=90, seed=7):
+    """(footprint parts, layer rings) rows: random points, lines and
+    triangles/quads scattered over and around the holed square and an
+    irregular 12-gon, so rows differ in edge count."""
+    rng = np.random.default_rng(seed)
+    ang = np.sort(rng.uniform(0, 2 * np.pi, 12))
+    rad = rng.uniform(3, 8, 12)
+    star = np.c_[5 + rad * np.cos(ang), 5 + rad * np.sin(ang)]
+    layers = [_HOLED, [np.vstack([star, star[:1]])]]
+    rows = []
+    for k in range(n):
+        pts = rng.uniform(-4, 14, 2) + rng.normal(0, 1.5, (int(rng.integers(3, 5)), 2))
+        kind = ("pt", "line", "poly")[k % 3]
+        part = (kind, [np.vstack([pts, pts[:1]])]) if kind == "poly" else (kind, pts)
+        rows.append(([part], layers[k % 2]))
+    return rows
+
+
+@pytest.mark.parametrize("slice_terms", [None, 2])
+def test_fp_refine_kernel_matches_reference(monkeypatch, slice_terms):
+    """The batched Arrow refine decides every row exactly as
+    geom_intersects_rings: in one batch, on sliced batches (non-zero
+    list offsets), on an empty batch, and split into many term slices."""
+    from fgcspark.joins import fpjoin as J
+    from fgcspark.joins.pip import _ring_segs
+
+    if slice_terms is not None:
+        monkeypatch.setattr(J, "_SLICE_TERMS", slice_terms)
+    rows = [(p, _HOLED) for p, _ in _INTERSECTS_CASES] + _random_refine_rows()
+    parts = J._parts_array([p for p, _ in rows]).field("parts")
+    edges = J._struct_list(
+        [np.concatenate([_ring_segs(r, closed=True) for r in rings]) for _, rings in rows], J.EDGE
+    )
+    verts = J._struct_list([np.concatenate(rings) for _, rings in rows], J.VERT)
+    want = [J.geom_intersects_rings(p, rings) for p, rings in rows]
+    assert 0 < sum(want) < len(want)
+    n = len(_INTERSECTS_CASES)
+    for k, m in ((0, len(rows)), (1, n - 1), (5, 40), (len(rows) - 1, 1)):
+        got = J._fp_refine.func(parts.slice(k, m), edges.slice(k, m), verts.slice(k, m))
+        assert got.to_pylist() == want[k : k + m]
+    assert J._fp_refine.func(parts.slice(3, 0), edges.slice(3, 0), verts.slice(3, 0)).to_pylist() == []
 
 
 def test_segs_touch_is_intersecting():
@@ -295,23 +356,63 @@ def test_fp_partitioned_matches_golden_and_broadcast(spark, pages_dir):
     assert key(default) == key(got)
 
 
-def test_fp_refine_backends_bit_identical(spark, pages_dir):
-    """The nested-lambda expression refine and the WKB/numpy refine
-    evaluate identical float predicates — identical row sets, on the
-    layer as generated and on an edge-heavy densified one (page
-    subset)."""
+def _brute_force_fp_pairs(pages: pd.DataFrame, layer: list) -> set:
+    """(url, poly_id) for every page whose footprint geometry
+    intersects a layer polygon, decided by geom_intersects_rings over
+    EVERY bbox-overlapping pair: per-geometry projection, no cell
+    cover, no Arrow. `layer` holds (poly_id, wkt) rows."""
+    from fgcspark.crs.tm35fin import geodetic_to_tm35
+    from fgcspark.geom.kernels import transform_coords
+    from fgcspark.geom.wkt import Geom, parse_wkt
+    from fgcspark.joins.fpjoin import _flatten_parts, geom_intersects_rings
+    from fgcspark.joins.pip import _polygon_rings
+
+    rings = [_polygon_rings(w) for _, w in layer]
+    boxes = np.array([[*np.vstack(r).min(axis=0), *np.vstack(r).max(axis=0)] for r in rings])
+    out = set()
+    for url, w, lon, lat in pages[["url", "footprint", "lon", "lat"]].itertuples(index=False):
+        # the G4 substitution: a NULL/POINT/EMPTY footprint with
+        # coordinates joins as the point
+        if (w is None or w.startswith("POINT") or "EMPTY" in w) and pd.notna(lon) and pd.notna(lat):
+            g = Geom("POINT", np.array([lon, lat]))
+        elif w is None:
+            continue
+        else:
+            try:
+                g = parse_wkt(w)
+            except Exception:
+                continue
+        parts: list = []
+        _flatten_parts(transform_coords(g, geodetic_to_tm35), parts)
+        if not parts:
+            continue
+        v = np.vstack([a for kind, arr in parts for a in (arr if kind == "poly" else [arr])])
+        (x0, y0), (x1, y1) = v.min(axis=0), v.max(axis=0)
+        near = (boxes[:, 0] <= x1) & (boxes[:, 2] >= x0) & (boxes[:, 1] <= y1) & (boxes[:, 3] >= y0)
+        for k in np.flatnonzero(near):
+            if geom_intersects_rings(parts, rings[k]):
+                out.add((url, int(layer[k][0])))
+    return out
+
+
+def test_fp_join_matches_brute_force(spark, pages_dir):
+    """footprint_join returns exactly the brute-force pair set, with no
+    duplicates, on the layer as generated and on an edge-heavy
+    densified one, under both the default plan and the `merge`-hinted
+    shuffle plan."""
     from fgcspark.extract import with_extracted
     from fgcspark.joins.fpjoin import footprint_join
     from fgcspark.pipeline import load_pages
 
     pages = with_extracted(load_pages(spark, pages_dir))
+    page_rows = pages.select("url", "footprint", "lon", "lat").toPandas()
     polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
-    subset = pages.where(F.xxhash64("url") % 4 == 0)
-    key = lambda d: sorted(map(tuple, d[["url", "poly_id"]].itertuples(index=False)))
-    for pg, layer in ((pages, polys), (subset, _densified(spark, pages_dir))):
-        a = footprint_join(spark, pg, layer, refine="expr").toPandas()
-        b = footprint_join(spark, pg, layer, refine="pandas").toPandas()
-        assert len(a) > 0 and key(a) == key(b)
+    for layer in (polys, _densified(spark, pages_dir)):
+        want = _brute_force_fp_pairs(page_rows, layer.select("poly_id", "wkt").collect())
+        assert want
+        for probe in (pages, pages.hint("merge")):
+            got = [tuple(r) for r in footprint_join(spark, probe, layer).collect()]
+            assert len(got) == len(set(got)) and set(got) == want
 
 
 def test_fp_join_prefilter_is_lossless(spark, pages_dir):

@@ -292,11 +292,10 @@ def arrow_eval_udfs(df) -> list[set[str]]:
     return found
 
 
-@pytest.mark.parametrize("refine, udfs", [("expr", 1), ("pandas", 2)])
-def test_footprint_join_probe_udf_runs_once(spark, pages_dir, refine, udfs):
-    """footprint_join evaluates its parse/project UDF once per row: the
-    expression refine has that one ArrowEvalPython node, the numpy
-    refine adds only its own refine UDF above the join."""
+def test_footprint_join_probe_udf_runs_once(spark, pages_dir):
+    """footprint_join evaluates its parse/project UDF once per row and
+    its refine as one Arrow UDF above the join, under both join
+    strategies; no JVM lambda is left in the plan."""
     from fgcspark.extract import with_extracted
     from fgcspark.joins.fpjoin import footprint_join
     from fgcspark.pipeline import load_pages
@@ -304,10 +303,17 @@ def test_footprint_join_probe_udf_runs_once(spark, pages_dir, refine, udfs):
     polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
     pages = with_extracted(load_pages(spark, pages_dir))
     for probe in (pages, pages.hint("merge")):
-        found = arrow_eval_udfs(footprint_join(spark, probe, polys, refine=refine))
-        assert len(found) == udfs, found
-        project = "_fp_project_parts" if refine == "expr" else "_fp_project_wkb"
-        assert sum(project in names for names in found) == 1
+        df = footprint_join(spark, probe, polys)
+        found = arrow_eval_udfs(df)
+        assert sorted(map(sorted, found)) == [["_fp_project_parts"], ["_fp_refine"]], found
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        lines = plan.splitlines()
+        at = lambda pat: next(i for i, ln in enumerate(lines) if re.search(pat, ln))
+        join = at(r"(BroadcastHashJoin|SortMergeJoin)")
+        assert at(r"ArrowEvalPython \[_fp_refine") < join < at(r"ArrowEvalPython \[_fp_project_parts")
+        assert "lambdafunction" not in plan
+    with pytest.raises(ValueError):
+        footprint_join(spark, pages, polys, refine="lambda")
 
 
 def test_dwithin_partitioned_probe_udf_runs_once(spark, pts, pages_dir):
