@@ -292,10 +292,14 @@ def arrow_eval_udfs(df) -> list[set[str]]:
     return found
 
 
-def test_footprint_join_probe_udf_runs_once(spark, pages_dir):
+# ids kept from the former (refine, UDF count) cases; both accepted
+# refine values now build the same plan
+@pytest.mark.parametrize("refine", ["expr", "pandas"], ids=["expr-1", "pandas-2"])
+def test_footprint_join_probe_udf_runs_once(spark, pages_dir, refine):
     """footprint_join evaluates its parse/project UDF once per row and
     its refine as one Arrow UDF above the join, under both join
-    strategies; no JVM lambda is left in the plan."""
+    strategies and either accepted `refine` value; no JVM lambda is
+    left in the plan."""
     from fgcspark.extract import with_extracted
     from fgcspark.joins.fpjoin import footprint_join
     from fgcspark.pipeline import load_pages
@@ -303,7 +307,7 @@ def test_footprint_join_probe_udf_runs_once(spark, pages_dir):
     polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
     pages = with_extracted(load_pages(spark, pages_dir))
     for probe in (pages, pages.hint("merge")):
-        df = footprint_join(spark, probe, polys)
+        df = footprint_join(spark, probe, polys, refine=refine)
         found = arrow_eval_udfs(df)
         assert sorted(map(sorted, found)) == [["_fp_project_parts"], ["_fp_refine"]], found
         plan = df._jdf.queryExecution().executedPlan().toString()
